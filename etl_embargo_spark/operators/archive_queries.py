@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from etl_embargo_spark.catalog import load_table, spread_for_cpu
 from etl_embargo_spark.functions.ipv6 import normalize_ipv6
-from etl_embargo_spark.sources.tar_source import ENTRY_SCHEMA, _make_exploder
+from etl_embargo_spark.sources.tar_source import _make_packer, explode_archives
 
 
 def ipv6_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,42 +66,29 @@ def tar_roundtrip_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread_for_cpu here: the pack kernel runs inside
     # groupBy("bucket").applyInPandas, whose own shuffle fixes parallelism
     # at the 16 bucket groups — a pre-repartition would be a wasted shuffle
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "bucket", (F.col("doc_id") % 16).cast("int")
+    bucket = (F.col("doc_id") % 16).cast("int")
+    docs = load_table(spark, sf_dir, "documents").select(
+        bucket.alias("bucket"),
+        F.format_string("bucket%02d/doc%08d.txt", bucket, F.col("doc_id")).alias("path"),
+        F.encode("text", "UTF-8").alias("content"),
+        F.lit(0o644).alias("mode"),
+        # fixed mtime: deterministic output
+        F.timestamp_seconds(F.lit(1489536000)).alias("mtime"),
     )
+    pack = _make_packer()
 
-    def _pack(key, pdf):
-        import gzip as _gzip
-        import io as _io
-        import tarfile as _tarfile
-
+    def _pack_bucket(key, pdf):
         import pandas as _pd
 
-        (bucket,) = key
-        buf = _io.BytesIO()
-        with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-            with _tarfile.open(fileobj=gz, mode="w") as tar:
-                for _, r in pdf.sort_values("doc_id").iterrows():
-                    data = (r["text"] or "").encode()
-                    info = _tarfile.TarInfo(
-                        name=f"bucket{bucket:02d}/doc{int(r['doc_id']):08d}.txt"
-                    )
-                    info.size = len(data)
-                    info.mtime = 1489536000  # fixed: deterministic output
-                    tar.addfile(info, _io.BytesIO(data))
+        (b,) = key
         return _pd.DataFrame(
-            {
-                "path": [f"mem://bucket{bucket:02d}.tgz"],
-                "content": [buf.getvalue()],
-            }
+            {"path": [f"mem://bucket{b:02d}.tgz"], "content": [pack(pdf)]}
         )
 
     archives = docs.groupBy("bucket").applyInPandas(
-        _pack, schema="path string, content binary"
+        _pack_bucket, schema="path string, content binary"
     )
-
-    entries = archives.mapInPandas(_make_exploder(), schema=ENTRY_SCHEMA)
-    return entries.select("archive", "path", "basename", "size")
+    return explode_archives(archives).select("archive", "path", "basename", "size")
 
 
 def q_tar_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

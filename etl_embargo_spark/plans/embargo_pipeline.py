@@ -15,14 +15,10 @@ flags it as a quirk not to replicate).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_embargo_spark.functions.filenames import (
-    embargo_rename,
-    filename_local_ip,
-    parse_date_int,
-)
+from etl_embargo_spark.functions.filenames import filename_local_ip, parse_date_int
 from etl_embargo_spark.functions.ipv6 import normalize_ipv6
 from etl_embargo_spark.operators.setops import overwrite_merge
 from etl_embargo_spark.sinks.routed_write import write_blobs, write_routed
@@ -32,7 +28,7 @@ from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archiv
 def classify_entries(
     entries: DataFrame,
     whitelist: DataFrame,
-    more_than_one_year: bool = False,
+    more_than_one_year: bool | Column = False,
 ) -> DataFrame:
     """P4 over real sidestream records — the exact reference rule
     (/root/reference/embargo.go:174)::
@@ -45,6 +41,11 @@ def classify_entries(
     "" when malformed) → IPv6 normalize (F3) → membership in the whitelist
     set (embargo_check.go:105-110).  Membership is a broadcast LEFT join on
     the normalized IP: dim side tiny (3.5k IPs), fact side never shuffles.
+
+    ``more_than_one_year`` is a bool for the whole input, or a boolean
+    Column evaluated per row (``embargo_day`` passes the archive-date
+    predicate).  A null age term counts as not old: it drops out of the
+    OR, so the row is public only by the other two terms.
 
     Null/malformed IPs ("" → no match) fall through to the whitelist-miss
     branch exactly as in the reference (SURVEY §7 risk 3).
@@ -59,7 +60,7 @@ def classify_entries(
         F.broadcast(wl), with_ip["local_ip"] == wl["wl_ip"], "left"
     )
     is_public = (
-        F.lit(more_than_one_year)
+        F.lit(more_than_one_year)  # a Column passes through lit unchanged
         | ~F.col("basename").contains("web100")
         | F.col("wl_ip").isNotNull()
     )
@@ -89,31 +90,19 @@ def embargo_day(
     ``archive_date_int`` is null, the date term drops out of the OR, and
     eligible records classify **private** — conservative (nothing leaks
     public), and the day still processes.
+
+    ``repack=True`` also writes the ``-p.tgz``/``-e.tgz`` archives to
+    ``repack_dir``, which must then be given: the blobs may not land in
+    ``out_dir``, whose root is the routed parquet dataset.
     """
-    entries = read_tar_entries(spark, archive_glob)
-    dated = entries.withColumn(
+    if repack and not repack_dir:
+        raise ValueError("embargo_day(repack=True) requires repack_dir")
+    dated = read_tar_entries(spark, archive_glob).withColumn(
         "archive_date_int", parse_date_int(F.col("archive"))
     )
-    wl = whitelist
-    raw_ip = filename_local_ip(F.col("basename"))
-    with_ip = dated.withColumn(
-        "local_ip",
-        F.when(raw_ip == "", F.lit(None)).otherwise(normalize_ipv6(raw_ip)),
+    classified = classify_entries(
+        dated, whitelist, F.col("archive_date_int") < F.lit(cutoff_int)
     )
-    wldim = wl.select(F.col("ip").alias("wl_ip")).distinct()
-    flagged = with_ip.join(
-        F.broadcast(wldim), with_ip["local_ip"] == wldim["wl_ip"], "left"
-    )
-    is_public = (
-        (F.col("archive_date_int") < F.lit(cutoff_int))
-        | ~F.col("basename").contains("web100")
-        | F.col("wl_ip").isNotNull()
-    )
-    classified = flagged.withColumn(
-        "visibility",
-        F.when(is_public, F.lit("public")).otherwise(F.lit("private")),
-    ).drop("wl_ip")
-
     write_routed(
         classified.select(
             "archive", "path", "basename", "local_ip", "size", "mode",
@@ -122,10 +111,7 @@ def embargo_day(
         out_dir,
     )
     if repack:
-        # repack_archives already applies the output-name convention
-        # (public → -p.tgz, private → -e.tgz per embargo.go:105); no
-        # further rename here.
-        write_blobs(repack_archives(classified), repack_dir or out_dir)
+        write_blobs(repack_archives(classified), repack_dir)
     return classified
 
 

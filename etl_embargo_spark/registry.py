@@ -77,6 +77,7 @@ DRIVER_WINDOW_FIRST = [
     "q_media_features",
     "q_media_framesample",
     "q_pagerank",
+    "q_tar_roundtrip",
     "q_textrank",
     "q_embed_quantize",
     "q_embedding_pairs",
@@ -116,7 +117,6 @@ DRIVER_WINDOW_FIRST = [
     "q_theil",
     "q_top_supplier",
     "q_vocab_coverage",
-    "q_wasserstein",
 ]
 
 # Changed after the current window was already full: drifted queries may

@@ -24,11 +24,10 @@ def write_routed(
     df: DataFrame,
     out_dir: str,
     partition_cols: tuple[str, ...] = ("visibility",),
-    mode: str = "overwrite",
 ) -> None:
     """Single-pass two-way (or N-way) routed write of classified records."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(out_dir)

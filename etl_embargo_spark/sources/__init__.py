@@ -1,3 +1,3 @@
-"""Source layer (SURVEY.md §2.1): the tar-archive exploder (the one custom
-datasource), line-text and JSON dim sources.
+"""Source layer (SURVEY.md §2.1): the tar-archive codec (explode and pack),
+line-text and JSON dim sources.
 """

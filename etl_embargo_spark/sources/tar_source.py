@@ -1,4 +1,4 @@
-"""S3 — the archive record source: .tgz objects → one row per tar entry.
+"""S3 — the archive codec: .tgz objects ⇄ one row per tar entry.
 
 Reference: /root/reference/embargo.go:125-173 — gzip reader → tar reader →
 keep regular files → project header fields + whole content.  The reference
@@ -11,13 +11,13 @@ and there are many — the right parallel grain at 100 TB).
 
 ``spark.read.format("binaryFile")`` provides distributed listing + the bytes;
 ``mapInPandas`` does the explode.  No driver-side loops anywhere.
+
+This module is the package's only tar decoder (:func:`explode_archives`,
+over any ``binaryFile``-shaped DataFrame, batch or streaming) and its only
+gzip+tar writer (``_make_packer``).
 """
 
 from __future__ import annotations
-
-import gzip
-import io
-import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +26,7 @@ ENTRY_SCHEMA = (
     "archive string, path string, basename string, size long, mode long, "
     "mtime timestamp, is_regular boolean, content binary"
 )
+QUARANTINE_SCHEMA = ENTRY_SCHEMA + ", error string"
 
 # NOTE on executor-side closures: every function shipped to executors in this
 # package is defined NESTED inside its builder so cloudpickle serializes it
@@ -35,12 +36,23 @@ ENTRY_SCHEMA = (
 # different cwd, or a cluster where the package isn't shipped).
 
 
-def _make_walker():
-    """Build the archive walker shared by the mapInPandas exploder and the
-    SQL UDTF (nested for by-value pickling): yields one ENTRY_SCHEMA-ordered
-    tuple per tar entry, mtime as a naive-UTC datetime."""
+def _make_exploder(quarantine: bool = False):
+    """Build the mapInPandas generator (self-contained for pickling).
+
+    ``quarantine=False`` (default): a corrupt archive raises and fails the
+    task — corruption upstream of a boundary you control means a bug, stop
+    (the same doctrine as formats.py's FAILFAST readers).
+    ``quarantine=True``: entry rows gain an ``error`` column (null for
+    good rows); a corrupt archive yields ONE marker row carrying the
+    archive name and the decode error instead of killing the batch — at
+    100 TB a 1e-8 archive-corruption rate is still daily occurrences, and
+    one bad blob must not wedge the day's partition (the reference's
+    skip-vs-error variants, embargo.go:279-299)."""
+    cols = [f.strip().split(" ")[0] for f in ENTRY_SCHEMA.split(",")]
 
     def _walk(path: str, content: bytes):
+        """One ENTRY_SCHEMA-ordered tuple per tar entry, mtime as a
+        naive-UTC datetime."""
         import datetime as _dt
         import gzip as _gzip
         import io as _io
@@ -67,27 +79,6 @@ def _make_walker():
                         data,
                     )
 
-    return _walk
-
-
-QUARANTINE_SCHEMA = ENTRY_SCHEMA + ", error string"
-
-
-def _make_exploder(quarantine: bool = False):
-    """Build the mapInPandas generator (self-contained for pickling).
-
-    ``quarantine=False`` (default): a corrupt archive raises and fails the
-    task — corruption upstream of a boundary you control means a bug, stop
-    (the same doctrine as formats.py's FAILFAST readers).
-    ``quarantine=True``: entry rows gain an ``error`` column (null for
-    good rows); a corrupt archive yields ONE marker row carrying the
-    archive name and the decode error instead of killing the batch — at
-    100 TB a 1e-8 archive-corruption rate is still daily occurrences, and
-    one bad blob must not wedge the day's partition (the reference's
-    skip-vs-error variants, embargo.go:279-299)."""
-    walk = _make_walker()
-    cols = [f.strip().split(" ")[0] for f in ENTRY_SCHEMA.split(",")]
-
     def _explode_archives(batches):
         # One input row per archive (binaryFile schema) → N rows per tar
         # entry; one output batch per archive keeps Arrow batch sizes
@@ -98,7 +89,7 @@ def _make_exploder(quarantine: bool = False):
             for _, row in pdf.iterrows():
                 if quarantine:
                     try:
-                        rows = list(walk(row["path"], row["content"]))
+                        rows = list(_walk(row["path"], row["content"]))
                     except Exception as exc:
                         name = str(row["path"]).rsplit("/", 1)[-1]
                         yield _pd.DataFrame(
@@ -114,25 +105,18 @@ def _make_exploder(quarantine: bool = False):
                         out["error"] = None
                         yield out
                 else:
-                    rows = list(walk(row["path"], row["content"]))
+                    rows = list(_walk(row["path"], row["content"]))
                     if rows:
                         yield _pd.DataFrame(rows, columns=cols)
 
     return _explode_archives
 
 
-def read_tar_entries(
-    spark: SparkSession,
-    path_glob: str,
-    regular_only: bool = True,
-    on_corrupt: str = "raise",
-) -> DataFrame:
-    """Load every .tgz under ``path_glob`` as a DataFrame of tar entries
-    (SURVEY D3: the atomic record).
-
-    ``pathGlobFilter`` keeps the listing pruned at the source (the analog of
-    the reference's name filter embargo.go:279-281); the P2 regular-file
-    filter (embargo.go:158-159) is applied unless disabled.
+def explode_archives(archives: DataFrame, on_corrupt: str = "raise") -> DataFrame:
+    """One row per regular tar entry of each archive in ``archives``, a
+    ``binaryFile``-shaped DataFrame (``path`` + ``content``; batch or
+    streaming).  The P2 regular-file filter (embargo.go:158-159) is
+    always applied.
 
     ``on_corrupt='raise'`` (default) fails the job on a bad archive;
     ``'quarantine'`` adds an ``error`` column and turns each corrupt
@@ -141,67 +125,48 @@ def read_tar_entries(
     """
     if on_corrupt not in ("raise", "quarantine"):
         raise ValueError(f"on_corrupt must be raise|quarantine, got {on_corrupt!r}")
-    archives = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tgz")
-        .load(path_glob)
-    )
     quarantine = on_corrupt == "quarantine"
     entries = archives.mapInPandas(
         _make_exploder(quarantine),
         schema=QUARANTINE_SCHEMA if quarantine else ENTRY_SCHEMA,
     )
-    if regular_only:
-        keep = F.col("is_regular")
-        if quarantine:
-            keep = keep | F.col("error").isNotNull()
-        entries = entries.filter(keep)
-    return entries
+    keep = F.col("is_regular")
+    if quarantine:
+        keep = keep | F.col("error").isNotNull()
+    return entries.filter(keep)
 
 
-def register_tar_udtf(spark: SparkSession, name: str = "explode_tar"):
-    """Register the tar exploder as a SQL-callable Python UDTF so the
-    custom source is reachable from the SQL front-end too:
+def read_tar_entries(
+    spark: SparkSession, path_glob: str, on_corrupt: str = "raise"
+) -> DataFrame:
+    """Load every .tgz under ``path_glob`` as a DataFrame of tar entries
+    (SURVEY D3: the atomic record).
 
-        SELECT t.* FROM archives,
-               LATERAL explode_tar(archives.path, archives.content) t
-
-    Same semantics as ``read_tar_entries`` (one row per tar entry); the
-    mapInPandas path remains the bulk-ingest shape (Arrow-batched), the
-    UDTF the ad-hoc SQL shape.
+    ``pathGlobFilter`` keeps the listing pruned at the source (the analog of
+    the reference's name filter embargo.go:279-281); see
+    :func:`explode_archives` for ``on_corrupt``.
     """
-    from pyspark.sql.functions import udtf
-
-    walk = _make_walker()
-
-    @udtf(returnType=ENTRY_SCHEMA)
-    class ExplodeTar:
-        def eval(self, path: str, content: bytes):  # noqa: D102
-            yield from walk(path, content)
-
-    spark.udtf.register(name, ExplodeTar)
-    return ExplodeTar
+    archives = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tgz")
+        .load(path_glob)
+    )
+    return explode_archives(archives, on_corrupt)
 
 
-def repack_archives(entries: DataFrame) -> DataFrame:
-    """K1 half — regroup classified entries into per-(archive, visibility)
-    .tgz blobs, mirroring the reference's two in-memory output archives
-    (embargo.go:126-127, tar writers 179-199).
+def _make_packer():
+    """Build the gzip+tar writer (nested for by-value pickling): packs a
+    pandas frame of entries (``path``, ``content``, ``mode``, ``mtime``)
+    into the bytes of one .tgz.  Members are sorted by path and the gzip
+    mtime is zeroed, so reruns are byte-stable (SURVEY ST3)."""
 
-    Returns ``(archive, visibility, out_name, content)`` with the embargoed
-    side renamed ``-e.tgz`` (embargo.go:105) and the public side ``-p.tgz``
-    (the golden-file convention, embargo_test.go:77,87).  Deterministic
-    output: entries are sorted by path inside each repacked archive and
-    gzip mtime is zeroed, so reruns are byte-stable (SURVEY ST3).
-    """
-    def _repack(key, pdf):
+    def _pack(pdf) -> bytes:
         import gzip as _gzip
         import io as _io
         import tarfile as _tarfile
 
         import pandas as _pd
 
-        archive, visibility = key
         buf = _io.BytesIO()
         with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
             with _tarfile.open(fileobj=gz, mode="w") as tar:
@@ -212,6 +177,26 @@ def repack_archives(entries: DataFrame) -> DataFrame:
                     info.mode = int(r["mode"])
                     info.mtime = int(_pd.Timestamp(r["mtime"]).timestamp())
                     tar.addfile(info, _io.BytesIO(data))
+        return buf.getvalue()
+
+    return _pack
+
+
+def repack_archives(entries: DataFrame) -> DataFrame:
+    """K1 half — regroup classified entries into per-(archive, visibility)
+    .tgz blobs, mirroring the reference's two in-memory output archives
+    (embargo.go:126-127, tar writers 179-199).
+
+    Returns ``(archive, visibility, out_name, content)`` with the embargoed
+    side renamed ``-e.tgz`` (embargo.go:105) and the public side ``-p.tgz``
+    (the golden-file convention, embargo_test.go:77,87).
+    """
+    pack = _make_packer()
+
+    def _repack(key, pdf):
+        import pandas as _pd
+
+        archive, visibility = key
         suffix = "-e.tgz" if visibility == "private" else "-p.tgz"
         out_name = (
             archive[: -len(".tgz")] + suffix
@@ -223,7 +208,7 @@ def repack_archives(entries: DataFrame) -> DataFrame:
                 "archive": [archive],
                 "visibility": [visibility],
                 "out_name": [out_name],
-                "content": [buf.getvalue()],
+                "content": [pack(pdf)],
             }
         )
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_embargo_spark.plans.embargo_pipeline import classify_entries
-from etl_embargo_spark.sources.tar_source import ENTRY_SCHEMA, _make_exploder
+from etl_embargo_spark.sources.tar_source import explode_archives
 
 BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -38,8 +38,7 @@ def stream_archive_entries(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(archive_dir)
     )
-    entries = archives.mapInPandas(_make_exploder(), schema=ENTRY_SCHEMA)
-    return entries.filter("is_regular")
+    return explode_archives(archives)
 
 
 def run_streaming_embargo(

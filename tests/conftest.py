@@ -38,3 +38,29 @@ def duck(sf_dir):
     con = duckdb_connection(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def embargo_inputs(tmp_path_factory) -> dict:
+    """A small seeded day of sidestream archives (``perfbench.gen``) with
+    the independent three-term oracle (``perfbench.oracle``) under
+    ``expected`` (age term on) and ``expected_no_date`` (age term off).
+
+    The day holds new, old and undated archives, web100 and other
+    entries, whitelisted, stranger, malformed and ``:::``-spelled IPs
+    and non-regular members, so it exercises every term of the rule."""
+    from perfbench import gen, oracle
+
+    inputs = gen.gen_embargo_day(
+        str(tmp_path_factory.mktemp("embargo_day")),
+        seed=7,
+        n_archives=4,
+        entries_per_archive=40,
+        max_entry_bytes=4096,
+    )
+    inputs["expected"] = oracle.expected_embargo(inputs, date_term=True)
+    inputs["expected_no_date"] = oracle.expected_embargo(inputs, date_term=False)
+    for exp in (inputs["expected"], inputs["expected_no_date"]):
+        assert exp["public"] and exp["private"]
+    assert inputs["expected"] != inputs["expected_no_date"]
+    return inputs

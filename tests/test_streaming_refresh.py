@@ -50,60 +50,47 @@ class TestForeachBatchDimRefresh:
 
 class TestStreamingEmbargo:
     def test_streaming_matches_batch_and_is_exactly_once(
-        self, spark, tmp_path
+        self, spark, embargo_inputs, tmp_path
     ):
-        """ST1 on the real archive path: streamed classify+routed-sink output
-        equals the batch pipeline's classification, and a rerun with the
-        same checkpoint adds no rows."""
-        import os
-        import shutil
-
-        import pytest
-        from pyspark.sql import functions as F
-
+        """ST1 on the real data path: streamed classify+routed-sink output
+        of a generated day equals the batch pipeline's classification and
+        the independent oracle, and a rerun with the same checkpoint adds
+        no rows."""
         from etl_embargo_spark.plans.embargo_pipeline import classify_entries
         from etl_embargo_spark.sources.tar_source import read_tar_entries
-        from etl_embargo_spark.sources.text_source import read_whitelist
         from etl_embargo_spark.streaming.archive_stream import (
             run_streaming_embargo,
         )
 
-        ref = "/root/reference/testdata"
-        input_tgz = os.path.join(
-            ref, "20170315T000000Z-mlab3-sea03-sidestream-0000.tgz"
-        )
-        wl_path = os.path.join(ref, "whitelist_full")
-        if not os.path.exists(input_tgz):
-            pytest.skip("reference testdata not available")
+        def rows(df):
+            return sorted(
+                map(tuple, df.select("archive", "path", "local_ip", "visibility").collect()),
+                key=repr,
+            )
 
-        # two archives => two file-source entries (copies are fine: the
-        # pipeline is per-archive)
-        src = tmp_path / "archives"
-        src.mkdir()
-        shutil.copy(input_tgz, src / "20170315T000000Z-a-sidestream-0000.tgz")
-        shutil.copy(input_tgz, src / "20170316T000000Z-b-sidestream-0000.tgz")
-
-        wl = read_whitelist(spark, wl_path)
+        src = embargo_inputs["archive_glob"]
+        wl = spark.read.parquet(embargo_inputs["whitelist_path"])
         out = str(tmp_path / "out")
         ckpt = str(tmp_path / "ckpt")
 
-        q = run_streaming_embargo(spark, str(src), wl, out, ckpt)
+        q = run_streaming_embargo(spark, src, wl, out, ckpt)
         q.awaitTermination(180)
-        got = spark.read.parquet(out)
-        n_first = got.count()
+        got = rows(spark.read.parquet(out))
 
-        batch = classify_entries(
-            read_tar_entries(spark, str(src)), wl, more_than_one_year=False
+        batch = classify_entries(read_tar_entries(spark, src), wl)
+        assert got == rows(batch)
+        want = sorted(
+            ((a, p, ip, vis)
+             for vis, side in embargo_inputs["expected_no_date"].items()
+             for a, p, ip, _sha in side),
+            key=repr,
         )
-        want = batch.groupBy("visibility").count().collect()
-        got_counts = got.groupBy("visibility").count().collect()
-        assert sorted(map(tuple, got_counts)) == sorted(map(tuple, want))
-        assert {r["visibility"] for r in got_counts} == {"public", "private"}
+        assert got == want
 
         # rerun with same checkpoint: exactly-once, nothing appended
-        q2 = run_streaming_embargo(spark, str(src), wl, out, ckpt)
+        q2 = run_streaming_embargo(spark, src, wl, out, ckpt)
         q2.awaitTermination(180)
-        assert spark.read.parquet(out).count() == n_first
+        assert spark.read.parquet(out).count() == len(got)
 
 
 def _write_events(spark, path: str, rows: list[tuple]) -> None:
