@@ -12,7 +12,7 @@ whole-stage codegen) picks the physical strategy — see SURVEY.md §2 for the
 operator-by-operator mapping with reference file:line citations.
 
 Layout:
-  session     — SparkSession builder tuned for local[32] and for scale-out
+  session     — SparkSession setup sized to the usable CPUs and for scale-out
   catalog     — explicit-schema parquet loaders for the test tables
   functions/  — scalar function layer (filename grammar, dates, ipv6)
   operators/  — embargo classifier, set ops, aggregations, dedup,

@@ -33,10 +33,26 @@ def filename_local_ip(name: Column | str) -> Column:
 
     Implemented as one regexp_extract (anchored, greedy middle) so the whole
     expression stays in codegen; ``regexp_extract`` returns ``""`` on no
-    match, which is exactly the reference's malformed-name behavior.
+    match, which is exactly the reference's malformed-name behavior.  The
+    ``(?s)`` flag lets the middle cross line terminators, as Go's
+    ``strings.Index`` slicing does.
     """
     col = F.col(name) if isinstance(name, str) else name
-    return F.regexp_extract(col, r"^[^_]*_(.*)_[^_]*$", 1)
+    return F.regexp_extract(col, r"(?s)^[^_]*_(.*)_[^_]*$", 1)
+
+
+def make_local_ip_parser():
+    """Build the Python form of F2 for executor code that already holds the
+    name in Python (the tar exploder): the same first/last-underscore rule
+    as :func:`filename_local_ip`, ``""`` when malformed.  Nested so
+    cloudpickle ships it by value (see sources/tar_source.py)."""
+
+    def local_ip(name):
+        start = name.find("_") + 1
+        end = name.rfind("_")
+        return name[start:end] if start < end else ""
+
+    return local_ip
 
 
 def basename(path: Column | str) -> Column:

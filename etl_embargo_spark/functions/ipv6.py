@@ -17,58 +17,55 @@ only applied to strings containing ':').
 
 from __future__ import annotations
 
-import ipaddress
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 
-def normalize_ipv6_py(value: str | None) -> str | None:
-    """Pure-Python kernel: canonicalize one IP string, None on failure.
+def make_normalizer():
+    """Build the F3 kernel: canonicalize one IP string, None on failure.
 
     The ``:::`` → ``::`` pre-repair mirrors the sidestream quirk; full
     canonicalization (leading zeros, longest-zero-run compression) comes from
-    ``ipaddress.ip_address`` which implements RFC 5952.
+    ``ipaddress.ip_address`` which implements RFC 5952.  ``""`` (F2's
+    malformed-name result) and None both map to None.
+
+    This is the package's only copy of the rule: the pandas UDF, the tar
+    exploder and :func:`normalize_ipv6_py` all call it.  The kernel is
+    nested (not a module-level function) so cloudpickle serializes it by
+    value — executors never need this package importable (same policy as
+    sources/tar_source.py).
     """
-    if value is None or value == "":
-        return None
-    if ":" not in value:
-        # IPv4 (or dotted garbage): the reference does not touch it.
-        return value
-    repaired = value.replace(":::", "::")
-    try:
-        return str(ipaddress.ip_address(repaired))
-    except ValueError:
-        return None
+    import ipaddress as _ipaddress
+
+    def normalize(value):
+        if value is None or value == "":
+            return None
+        if ":" not in value:
+            # IPv4 (or dotted garbage): the reference does not touch it.
+            return value
+        try:
+            return str(_ipaddress.ip_address(value.replace(":::", "::")))
+        except ValueError:
+            return None
+
+    return normalize
 
 
-def _make_udf():
-    """Build the Pandas UDF with a self-contained kernel.
+_normalize = make_normalizer()
 
-    The kernel is nested (not a module-level reference) so cloudpickle
-    serializes it by value — executors never need this package importable
-    (same policy as sources/tar_source.py).
-    """
 
-    def _kernel(s):
-        import ipaddress as _ipaddress
-
-        def norm(value):
-            if value is None or value == "":
-                return None
-            if ":" not in value:
-                return value
-            try:
-                return str(_ipaddress.ip_address(value.replace(":::", "::")))
-            except ValueError:
-                return None
-
-        return s.map(norm)
-
-    return F.pandas_udf(_kernel, StringType())
+def normalize_ipv6_py(value: str | None) -> str | None:
+    """Pure-Python form of F3 (see :func:`make_normalizer`)."""
+    return _normalize(value)
 
 
 def normalize_ipv6(col: Column | str) -> Column:
     """Column form of F3: canonicalized IP, null when unparseable."""
-    return _make_udf()(F.col(col) if isinstance(col, str) else col)
+    norm = make_normalizer()
+
+    def _kernel(s):
+        return s.map(norm)
+
+    udf = F.pandas_udf(_kernel, StringType())
+    return udf(F.col(col) if isinstance(col, str) else col)

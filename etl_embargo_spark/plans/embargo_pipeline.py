@@ -1,8 +1,9 @@
 """E1/E2/E3 — the reference's three entry points as DataFrame pipelines.
 
 E1 (embargo a day, /root/reference/deploy/deploy.go:23-71 →
-embargo.go:248-293): archives → explode entries → classify → routed write.
-One job: scan/explode stage + shuffle-free broadcast-join projection + write.
+embargo.go:248-293): archives → explode entries → classify → routed write
+(→ repack).  Each archive is decoded once and nothing is shuffled: the
+scan/explode stage, a broadcast ExistenceJoin projection and the write.
 
 E2 (unembargo/publish, unembargo.go:86-140): last-writer-wins merge of the
 newly-aged-out private records into the public listing.
@@ -18,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_embargo_spark.functions.filenames import filename_local_ip, parse_date_int
-from etl_embargo_spark.functions.ipv6 import normalize_ipv6
+from etl_embargo_spark.functions.filenames import parse_date_int
 from etl_embargo_spark.operators.setops import overwrite_merge
 from etl_embargo_spark.sinks.routed_write import write_blobs, write_routed
 from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
@@ -39,35 +39,33 @@ def classify_entries(
 
     where CheckInWhiteList = GetLocalIP (F2: between first/last underscore,
     "" when malformed) → IPv6 normalize (F3) → membership in the whitelist
-    set (embargo_check.go:105-110).  Membership is a broadcast LEFT join on
-    the normalized IP: dim side tiny (3.5k IPs), fact side never shuffles.
+    set (embargo_check.go:105-110).
+
+    The normalized IP is the input's ``local_ip`` column, which
+    :func:`~etl_embargo_spark.sources.tar_source.explode_archives` derives
+    while it decodes each entry.  Membership is an IN-subquery on the
+    broadcast whitelist, which plans as a ``BroadcastHashJoin``
+    ExistenceJoin: no aggregate, no shuffle of either side, and duplicate
+    whitelist IPs cannot duplicate entries.
 
     ``more_than_one_year`` is a bool for the whole input, or a boolean
     Column evaluated per row (``embargo_day`` passes the archive-date
     predicate).  A null age term counts as not old: it drops out of the
     OR, so the row is public only by the other two terms.
 
-    Null/malformed IPs ("" → no match) fall through to the whitelist-miss
-    branch exactly as in the reference (SURVEY §7 risk 3).
+    Null/malformed IPs ("" → null) never match, so they fall through to
+    the whitelist-miss branch exactly as in the reference (SURVEY §7
+    risk 3).
     """
-    raw_ip = filename_local_ip(F.col("basename"))
-    with_ip = entries.withColumn(
-        "local_ip",
-        F.when(raw_ip == "", F.lit(None)).otherwise(normalize_ipv6(raw_ip)),
-    )
-    wl = whitelist.select(F.col("ip").alias("wl_ip")).distinct()
-    flagged = with_ip.join(
-        F.broadcast(wl), with_ip["local_ip"] == wl["wl_ip"], "left"
-    )
     is_public = (
         F.lit(more_than_one_year)  # a Column passes through lit unchanged
         | ~F.col("basename").contains("web100")
-        | F.col("wl_ip").isNotNull()
+        | F.col("local_ip").isin(F.broadcast(whitelist).select("ip"))
     )
-    return flagged.withColumn(
+    return entries.withColumn(
         "visibility",
         F.when(is_public, F.lit("public")).otherwise(F.lit("private")),
-    ).drop("wl_ip")
+    )
 
 
 def embargo_day(
@@ -94,6 +92,14 @@ def embargo_day(
     ``repack=True`` also writes the ``-p.tgz``/``-e.tgz`` archives to
     ``repack_dir``, which must then be given: the blobs may not land in
     ``out_dir``, whose root is the routed parquet dataset.
+
+    Job shape: the routed write is one scan → explode (which also derives
+    ``local_ip``) → broadcast ExistenceJoin classify → partitioned write,
+    plus the whitelist broadcast.  With ``repack=True`` the classified
+    frame is persisted for the routed write, so the repack reads the cache
+    instead of gunzipping every archive again, and packs each archive in
+    the partition that holds it (no shuffle).  The cache is released
+    before returning, also when a write fails.
     """
     if repack and not repack_dir:
         raise ValueError("embargo_day(repack=True) requires repack_dir")
@@ -103,15 +109,19 @@ def embargo_day(
     classified = classify_entries(
         dated, whitelist, F.col("archive_date_int") < F.lit(cutoff_int)
     )
-    write_routed(
-        classified.select(
-            "archive", "path", "basename", "local_ip", "size", "mode",
-            "mtime", "content", "visibility",
-        ),
-        out_dir,
+    routed = classified.select(
+        "archive", "path", "basename", "local_ip", "size", "mode",
+        "mtime", "content", "visibility",
     )
-    if repack:
+    if not repack:
+        write_routed(routed, out_dir)
+        return classified
+    classified.persist()
+    try:
+        write_routed(routed, out_dir)
         write_blobs(repack_archives(classified), repack_dir)
+    finally:
+        classified.unpersist()
     return classified
 
 

@@ -70,6 +70,7 @@ DRIVER_WINDOW_FIRST = [
     "q_corpus_dedup",
     "q_dbscan",
     "q_dedup_clusters",
+    "q_filename_parse",
     "q_hits",
     "q_kcore",
     "q_label_propagation",
@@ -116,7 +117,6 @@ DRIVER_WINDOW_FIRST = [
     "q_stem",
     "q_theil",
     "q_top_supplier",
-    "q_vocab_coverage",
 ]
 
 # Changed after the current window was already full: drifted queries may
@@ -512,7 +512,7 @@ register(
     )
     SELECT l_orderkey, l_linenumber, name,
            substr(name, 1, 8) AS date8,
-           regexp_extract(name, '^[^_]*_(.*)_[^_]*$', 1) AS local_ip
+           regexp_extract(name, '(?s)^[^_]*_(.*)_[^_]*$', 1) AS local_ip
     FROM named
     """,
 )

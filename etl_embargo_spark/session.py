@@ -9,8 +9,9 @@ anything:
 * AQE on — runtime coalescing of small shuffle partitions, dynamic
   broadcast-join conversion, and skew-join splitting cover the data-dependent
   decisions the reference hand-codes (build-side hash sets).
-* shuffle.partitions sized for the local harness via env; on a real cluster
-  AQE's coalescing makes the initial number mostly a ceiling.
+* shuffle.partitions sized for the local harness (usable CPUs, or
+  ``SPARK_GRAFT_CPUS``); on a real cluster AQE's coalescing makes the
+  initial number mostly a ceiling.
 * Arrow on — every Pandas UDF / mapInPandas path (tar exploder, ipv6
   normalizer, embedding kernels) moves batches, never rows.
 * maxPartitionBytes 128m — parquet scan splits sized so one task's input fits
@@ -32,8 +33,12 @@ def _int_env(name: str, default: int) -> int:
 
 
 def get_spark(app_name: str = "etl_embargo_spark") -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
-    cpus = _int_env("SPARK_GRAFT_CPUS", 32)
+    """Build (or reuse) a SparkSession with the engine's standard config.
+
+    ``local[n]`` uses the CPUs this process may run on unless
+    ``SPARK_GRAFT_CPUS`` (or ``SPARK_GRAFT_MASTER``) says otherwise: more
+    task slots than cores only adds contention."""
+    cpus = _int_env("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))

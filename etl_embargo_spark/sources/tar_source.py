@@ -11,20 +11,31 @@ and there are many — the right parallel grain at 100 TB).
 
 ``spark.read.format("binaryFile")`` provides distributed listing + the bytes;
 ``mapInPandas`` does the explode.  No driver-side loops anywhere.
+The exploder already holds each entry's name in Python, so it also derives
+the normalized ``local_ip`` (F2, then F3) there: the classifier needs no
+second Arrow pass over the entries.
 
 This module is the package's only tar decoder (:func:`explode_archives`,
 over any ``binaryFile``-shaped DataFrame, batch or streaming) and its only
-gzip+tar writer (``_make_packer``).
+gzip+tar writer (``_make_packer``).  :func:`repack_archives` packs within
+the partitions the scan produced, since every entry of an archive comes
+from the same ``binaryFile`` row: the repack needs no shuffle.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_embargo_spark.functions.filenames import make_local_ip_parser
+from etl_embargo_spark.functions.ipv6 import make_normalizer
+
 ENTRY_SCHEMA = (
-    "archive string, path string, basename string, size long, mode long, "
-    "mtime timestamp, is_regular boolean, content binary"
+    "archive string, path string, basename string, local_ip string, "
+    "size long, mode long, mtime timestamp, is_regular boolean, "
+    "content binary"
 )
 QUARANTINE_SCHEMA = ENTRY_SCHEMA + ", error string"
 
@@ -47,8 +58,14 @@ def _make_exploder(quarantine: bool = False):
     archive name and the decode error instead of killing the batch — at
     100 TB a 1e-8 archive-corruption rate is still daily occurrences, and
     one bad blob must not wedge the day's partition (the reference's
-    skip-vs-error variants, embargo.go:279-299)."""
+    skip-vs-error variants, embargo.go:279-299).
+
+    ``local_ip`` is F3(F2(basename)), null when the name is malformed or
+    the IP does not parse — the same value as the SQL F2
+    (``filename_local_ip``) through the F3 pandas UDF."""
     cols = [f.strip().split(" ")[0] for f in ENTRY_SCHEMA.split(",")]
+    local_ip = make_local_ip_parser()
+    normalize = make_normalizer()
 
     def _walk(path: str, content: bytes):
         """One ENTRY_SCHEMA-ordered tuple per tar entry, mtime as a
@@ -66,10 +83,12 @@ def _make_exploder(quarantine: bool = False):
                 for info in tar:
                     is_reg = info.isreg()
                     data = tar.extractfile(info).read() if is_reg else None
+                    base = info.name.rsplit("/", 1)[-1]
                     yield (
                         archive_name,
                         info.name,
-                        info.name.rsplit("/", 1)[-1],
+                        base,
+                        normalize(local_ip(base)),
                         info.size,
                         info.mode,
                         _dt.datetime.fromtimestamp(
@@ -94,8 +113,8 @@ def _make_exploder(quarantine: bool = False):
                         name = str(row["path"]).rsplit("/", 1)[-1]
                         yield _pd.DataFrame(
                             [
-                                (name, None, None, None, None, None, None,
-                                 None, f"{type(exc).__name__}: {exc}")
+                                (name,) + (None,) * (len(cols) - 1)
+                                + (f"{type(exc).__name__}: {exc}",)
                             ],
                             columns=cols + ["error"],
                         )
@@ -157,8 +176,9 @@ def read_tar_entries(
 def _make_packer():
     """Build the gzip+tar writer (nested for by-value pickling): packs a
     pandas frame of entries (``path``, ``content``, ``mode``, ``mtime``)
-    into the bytes of one .tgz.  Members are sorted by path and the gzip
-    mtime is zeroed, so reruns are byte-stable (SURVEY ST3)."""
+    into the bytes of one .tgz.  Members are sorted by path (stably, so
+    duplicate paths keep their input order) and the gzip mtime is zeroed,
+    so reruns are byte-stable (SURVEY ST3)."""
 
     def _pack(pdf) -> bytes:
         import gzip as _gzip
@@ -170,7 +190,7 @@ def _make_packer():
         buf = _io.BytesIO()
         with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
             with _tarfile.open(fileobj=gz, mode="w") as tar:
-                for _, r in pdf.sort_values("path").iterrows():
+                for _, r in pdf.sort_values("path", kind="stable").iterrows():
                     info = _tarfile.TarInfo(name=r["path"])
                     data = bytes(r["content"]) if r["content"] is not None else b""
                     info.size = len(data)
@@ -182,6 +202,94 @@ def _make_packer():
     return _pack
 
 
+# One executed-plan tree-string line: tree decoration, optional codegen
+# stage id, node name, the rest.
+_PLAN_LINE = re.compile(r"^([\s:+\-]*)(?:\*\(\d+\) )?(\w+)(.*)$")
+
+
+def _stream_shuffle(plan: str) -> str | None:
+    """The first plan line that shuffles the rows flowing to the plan's
+    root — an ``Exchange`` (ShuffleExchangeExec), AQE's
+    ``ShuffleQueryStage``, or a ReusedExchange of one — or None.  The
+    subtree under a broadcast is skipped: a shuffle there (a ``distinct``
+    whitelist) only builds the broadcast relation.
+
+    This reads the text of ``SparkPlan.treeString`` (node names after the
+    tree decoration, a child indented deeper than its parent), so a
+    change to that format in a later Spark release can blind it."""
+    broadcast_depth = None
+    for line in plan.splitlines():
+        m = _PLAN_LINE.match(line)
+        if not m:
+            continue
+        depth, node, rest = len(m.group(1)), m.group(2), m.group(3)
+        if broadcast_depth is not None:
+            if depth > broadcast_depth:
+                continue
+            broadcast_depth = None
+        if node in ("BroadcastExchange", "BroadcastQueryStage"):
+            broadcast_depth = depth
+        elif node in ("Exchange", "ShuffleQueryStage") or (
+            node == "ReusedExchange" and ", Exchange " in rest
+        ):
+            return line.strip()
+    return None
+
+
+def _make_repacker():
+    """Build the per-partition repack generator (nested for by-value
+    pickling).  It walks runs of rows with the same ``archive`` and packs
+    one blob per visibility each time the archive changes, so memory holds
+    one archive's entries at a time."""
+    pack = _make_packer()
+
+    def _blobs(archive, parts):
+        import pandas as _pd
+
+        pdf = _pd.concat(parts, ignore_index=True)
+        stem = archive[: -len(".tgz")] if archive.endswith(".tgz") else archive
+        return _pd.DataFrame(
+            [
+                (archive, visibility,
+                 stem + ("-e.tgz" if visibility == "private" else "-p.tgz"),
+                 pack(group))
+                for visibility, group in pdf.groupby("visibility", sort=True)
+            ],
+            columns=["archive", "visibility", "out_name", "content"],
+        )
+
+    def _repack(batches):
+        archive, parts, written = None, [], set()
+
+        def flush():
+            out = _blobs(archive, parts)
+            again = written.intersection(out["out_name"])
+            if again:
+                # a second run of one group packs a second, partial blob
+                # under the same out_name
+                raise ValueError(
+                    f"repack_archives: entries for {sorted(again)} are not "
+                    "contiguous in their partition"
+                )
+            written.update(out["out_name"])
+            return out
+
+        for pdf in batches:
+            runs = (pdf["archive"] != pdf["archive"].shift()).cumsum()
+            for _, run in pdf.groupby(runs, sort=False):
+                name = run["archive"].iat[0]
+                if name != archive:
+                    if parts:
+                        yield flush()
+                        parts = []
+                    archive = name
+                parts.append(run)
+        if parts:
+            yield flush()
+
+    return _repack
+
+
 def repack_archives(entries: DataFrame) -> DataFrame:
     """K1 half — regroup classified entries into per-(archive, visibility)
     .tgz blobs, mirroring the reference's two in-memory output archives
@@ -190,29 +298,31 @@ def repack_archives(entries: DataFrame) -> DataFrame:
     Returns ``(archive, visibility, out_name, content)`` with the embargoed
     side renamed ``-e.tgz`` (embargo.go:105) and the public side ``-p.tgz``
     (the golden-file convention, embargo_test.go:77,87).
+
+    The pack runs inside each partition, with no shuffle: it needs every
+    entry of an (archive, visibility) group in one partition, in one
+    contiguous run, which is how :func:`explode_archives` emits an
+    archive's entries and how narrow transformations (the broadcast
+    classify, a filter, a cache) keep them.  The input must therefore be
+    ``explode_archives`` output carried through narrow operations only.
+
+    Two violations are caught.  An input whose plan shuffles could split a
+    group across tasks that would each write the same ``out_name``, so it
+    is refused with ValueError before any Spark job runs; a group split in
+    two runs of one partition fails its task.  A split with no shuffle is
+    NOT detected: a scan that cuts one archive's rows across partitions
+    (for example a parquet re-read of the routed output whose file is
+    larger than ``maxPartitionBytes``) would write partial blobs.
     """
-    pack = _make_packer()
-
-    def _repack(key, pdf):
-        import pandas as _pd
-
-        archive, visibility = key
-        suffix = "-e.tgz" if visibility == "private" else "-p.tgz"
-        out_name = (
-            archive[: -len(".tgz")] + suffix
-            if archive.endswith(".tgz")
-            else archive + suffix
+    shuffle = _stream_shuffle(entries._jdf.queryExecution().executedPlan().treeString())
+    if shuffle is not None:
+        raise ValueError(
+            "repack_archives needs each archive's entries in one partition; "
+            f"its input plan shuffles them: {shuffle}"
         )
-        return _pd.DataFrame(
-            {
-                "archive": [archive],
-                "visibility": [visibility],
-                "out_name": [out_name],
-                "content": [pack(pdf)],
-            }
-        )
-
-    return entries.groupBy("archive", "visibility").applyInPandas(
-        _repack,
+    return entries.select(
+        "archive", "visibility", "path", "content", "mode", "mtime"
+    ).mapInPandas(
+        _make_repacker(),
         schema="archive string, visibility string, out_name string, content binary",
     )

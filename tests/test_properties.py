@@ -9,8 +9,12 @@ All properties are evaluated in ONE Spark job per hypothesis example
 from __future__ import annotations
 
 import base64
+import io
+import os
+import tarfile
+import tempfile
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -34,6 +38,31 @@ def _py_local_ip(name: str) -> str:
     if start >= end or end == -1:
         return ""
     return name[start:end]
+
+
+# Sidestream-shaped member names: a date-ish head, an IP-ish middle (IPv6,
+# IPv6 with the ``:::`` spelling, IPv4 or garbage) and a tail, mixed with
+# free text that may have fewer than two underscores.  Line terminators are
+# in the alphabet: a regex '.' without DOTALL would not cross them.
+_MEMBER_ALPHABET = st.characters(
+    min_codepoint=0x20, max_codepoint=0x7E, exclude_characters="/",
+    include_characters="\n\r\u2028",
+)
+_ip_like = st.one_of(
+    st.ip_addresses(v=6).map(str),
+    st.ip_addresses(v=6).map(lambda a: str(a).replace("::", ":::")),
+    st.ip_addresses(v=4).map(str),
+    st.text(alphabet="0123456789abcdef:._", max_size=20),
+)
+member_names = st.one_of(
+    st.builds(
+        lambda head, ip, tail: f"{head}_{ip}_{tail}",
+        st.text(alphabet=_MEMBER_ALPHABET, max_size=12),
+        _ip_like,
+        st.text(alphabet=_MEMBER_ALPHABET, max_size=12),
+    ),
+    st.text(alphabet=_MEMBER_ALPHABET, min_size=1, max_size=40),
+)
 
 
 def _py_rename(name: str) -> str:
@@ -67,6 +96,32 @@ class TestFilenameGrammarProperties:
             assert r["base"] == n.rsplit("/", 1)[-1], f"basename({n!r})"
             assert r["renamed"] == _py_rename(n), f"rename({n!r})"
             assert r["dpath"] == _py_date_path(n), f"date_path({n!r})"
+
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(member_names, min_size=1, max_size=30))
+    @example(names=["x_a\nb_y.web100", "x_a\r\u2028b_y"])
+    def test_exploder_local_ip_matches_reference_model(self, spark, names):
+        """The tar exploder's ``local_ip`` (Python F2, then F3) equals the
+        Go GetLocalIP model followed by F3, and the SQL F2 through the F3
+        UDF, with ``""`` as null."""
+        from etl_embargo_spark.functions.ipv6 import normalize_ipv6, normalize_ipv6_py
+        from etl_embargo_spark.sources.tar_source import read_tar_entries
+
+        with tempfile.TemporaryDirectory() as d:
+            with tarfile.open(os.path.join(d, "day.tgz"), "w:gz", format=tarfile.PAX_FORMAT) as tar:
+                for i, name in enumerate(names):
+                    info = tarfile.TarInfo(f"{i:03d}/{name}")
+                    tar.addfile(info, io.BytesIO(b""))
+            raw = fn.filename_local_ip(F.col("basename"))
+            rows = read_tar_entries(spark, d).select(
+                "path", "basename", "local_ip",
+                F.when(raw == "", F.lit(None)).otherwise(normalize_ipv6(raw)).alias("sql_ip"),
+            ).collect()
+        assert sorted(r["path"] for r in rows) == [f"{i:03d}/{n}" for i, n in enumerate(names)]
+        for r in rows:
+            want = normalize_ipv6_py(_py_local_ip(r["basename"]) or None)
+            assert r["local_ip"] == want, f"local_ip({r['basename']!r})"
+            assert r["sql_ip"] == want, f"sql local_ip({r['basename']!r})"
 
     @settings(max_examples=10, deadline=None)
     @given(

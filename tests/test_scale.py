@@ -89,6 +89,49 @@ class TestRecommendedConf:
         assert parts >= 8000  # never below total cores
 
 
+class TestGetSparkDefaults:
+    def test_master_follows_usable_cpus(self, monkeypatch):
+        """Without ``SPARK_GRAFT_CPUS``/``SPARK_GRAFT_MASTER`` the local
+        master and the partition counts follow the CPUs this process may
+        run on; ``SPARK_GRAFT_CPUS`` still overrides them."""
+        from pyspark.sql import SparkSession
+
+        from etl_embargo_spark import session
+
+        class Recorder:
+            """Stands in for ``SparkSession.builder``; getOrCreate returns
+            the settings instead of starting a session."""
+
+            def __init__(self):
+                self.conf = {}
+
+            def appName(self, name):
+                return self
+
+            def master(self, master):
+                self.conf["master"] = master
+                return self
+
+            def config(self, key, value):
+                self.conf[key] = value
+                return self
+
+            def getOrCreate(self):
+                return dict(self.conf)
+
+        monkeypatch.setattr(SparkSession, "builder", Recorder())
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+        monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+        conf = session.get_spark()
+        assert conf["master"] == "local[3]"
+        assert conf["spark.sql.shuffle.partitions"] == "3"
+        assert conf["spark.default.parallelism"] == "3"
+
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+        assert session.get_spark()["master"] == "local[5]"
+
+
 class TestBucketedJoin:
     def test_bucketed_tables_join_without_exchange(self, spark, sf_dir, tmp_path):
         """Pre-bucketing both sides on the join key removes the shuffle

@@ -198,6 +198,126 @@ def test_generated_entry_source(spark, embargo_inputs):
     assert all(r["is_regular"] and r["size"] == len(r["content"]) for r in rows)
 
 
+def test_exploder_local_ip_matches_sql_f2_f3(spark, embargo_inputs):
+    """The exploder's Python F2+F3 ``local_ip`` equals the SQL F2
+    (``filename_local_ip``) through the F3 pandas UDF on every entry of
+    the day, malformed names and unparseable IPv6 included."""
+    from etl_embargo_spark.functions.filenames import filename_local_ip
+    from etl_embargo_spark.functions.ipv6 import normalize_ipv6
+    from etl_embargo_spark.sources.tar_source import read_tar_entries
+
+    raw = filename_local_ip(F.col("basename"))
+    rows = read_tar_entries(spark, embargo_inputs["archive_glob"]).select(
+        "basename", "local_ip", raw.alias("raw"),
+        F.when(raw == "", F.lit(None)).otherwise(normalize_ipv6(raw)).alias("sql_ip"),
+    ).collect()
+    assert len(rows) == embargo_inputs["records"]
+    assert [r for r in rows if r["local_ip"] != r["sql_ip"]] == []
+    # the day reaches every branch of F2 and F3
+    assert any(r["raw"] == "" for r in rows)
+    assert any(r["raw"] != "" and r["local_ip"] is None for r in rows)
+    assert any(":::" in r["raw"] and r["local_ip"] is not None for r in rows)
+
+
+def _shuffle_lines(plan: str) -> list[str]:
+    """Plan lines naming an exchange other than a broadcast."""
+    return [ln for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+
+
+def _classified(spark, embargo_inputs):
+    from etl_embargo_spark.plans.embargo_pipeline import classify_entries
+    from etl_embargo_spark.sources.tar_source import read_tar_entries
+
+    entries = read_tar_entries(spark, embargo_inputs["archive_glob"])
+    return classify_entries(entries, spark.read.parquet(embargo_inputs["whitelist_path"]))
+
+
+def test_classify_plans_broadcast_existence_join(spark, embargo_inputs):
+    """Whitelist membership runs as an ExistenceJoin inside a
+    BroadcastHashJoin: no aggregate over the whitelist and no shuffle."""
+    classified = _classified(spark, embargo_inputs)
+    classified.collect()
+    plan = classified._jdf.queryExecution().executedPlan().toString()
+    assert any("BroadcastHashJoin" in ln and "ExistenceJoin" in ln for ln in plan.splitlines())
+    assert _shuffle_lines(plan) == []
+    assert "HashAggregate" not in plan
+
+
+def test_repack_runs_without_shuffle(spark, embargo_inputs):
+    """The repack packs inside the scan's partitions: its plan has no
+    shuffle exchange."""
+    from etl_embargo_spark.sources.tar_source import repack_archives
+
+    blobs = repack_archives(_classified(spark, embargo_inputs))
+    assert blobs.count() == len({(a, vis) for vis, side in embargo_inputs["expected_no_date"].items()
+                                 for a, *_ in side})
+    plan = blobs._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert _shuffle_lines(plan) == []
+
+
+def test_repack_refuses_shuffled_input(spark, embargo_inputs):
+    """A shuffled input could split one archive across tasks that write
+    the same ``out_name``; the repack refuses it from the plan alone,
+    before any Spark job runs."""
+    from etl_embargo_spark.plans.embargo_pipeline import classify_entries
+    from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
+
+    shuffled = _classified(spark, embargo_inputs).repartition(8)
+    # a shuffle on the broadcast side (a distinct whitelist) keeps every
+    # archive where the scan put it, so it is accepted
+    entries = read_tar_entries(spark, embargo_inputs["archive_glob"])
+    distinct_wl = spark.read.parquet(embargo_inputs["whitelist_path"]).distinct()
+    broadcast_shuffle = classify_entries(entries, distinct_wl)
+    sc = spark.sparkContext
+    sc.setJobGroup("repack-refuses-shuffle", "repack of a shuffled input")
+    try:
+        with pytest.raises(ValueError, match="shuffles"):
+            repack_archives(shuffled)
+        repack_archives(broadcast_shuffle)
+        assert list(sc.statusTracker().getJobIdsForGroup("repack-refuses-shuffle")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_repack_groups_within_one_partition(spark):
+    """In one partition, an archive may come back for its other
+    visibility, but a (archive, visibility) group split in two runs would
+    pack two partial blobs under one name, so the task fails."""
+    import datetime
+
+    from etl_embargo_spark.sources.tar_source import repack_archives
+
+    def blobs(groups):
+        t = datetime.datetime(2017, 3, 15)
+        rows = [(a, vis, f"d/{a}{i}", b"x", 0o644, t) for i, (a, vis) in enumerate(groups)]
+        df = spark.createDataFrame(
+            rows, "archive string, visibility string, path string, content binary, "
+            "mode long, mtime timestamp",
+        ).coalesce(1)
+        return sorted(r["out_name"] for r in repack_archives(df).collect())
+
+    assert blobs([("a.tgz", "public"), ("b.tgz", "public"), ("a.tgz", "private")]) == [
+        "a-e.tgz", "a-p.tgz", "b-p.tgz",
+    ]
+    with pytest.raises(Exception, match="not contiguous"):
+        blobs([("a.tgz", "public"), ("b.tgz", "public"), ("a.tgz", "public")])
+
+
+def test_classify_whitelist_duplicates_and_nulls(spark, embargo_inputs):
+    """Duplicate and null whitelist IPs neither duplicate nor publish
+    entries."""
+    from etl_embargo_spark.plans.embargo_pipeline import classify_entries
+    from etl_embargo_spark.sources.tar_source import read_tar_entries
+
+    entries = read_tar_entries(spark, embargo_inputs["archive_glob"])
+    wl = spark.read.parquet(embargo_inputs["whitelist_path"]).select("ip")
+    noisy = wl.unionByName(wl).unionByName(spark.createDataFrame([(None,)], "ip string"))
+    classified = classify_entries(entries, noisy)
+    assert classified.count() == embargo_inputs["records"]
+    assert _oracle_rows(classified) == embargo_inputs["expected_no_date"]
+
+
 def test_classify_age_term_bool_and_column(spark, embargo_inputs):
     """``classify_entries`` takes the age term as a bool or as a per-row
     Column; the positional two-argument call means "not old"."""
@@ -261,6 +381,53 @@ def test_generated_embargo_day_end_to_end(spark, embargo_inputs, tmp_path):
     oracle.check_embargo(embargo_inputs["expected"], routed, repacked)
     pub = spark.read.parquet(routed).filter(F.col("visibility") == "public")
     assert "PartitionFilters" in pub._jdf.queryExecution().executedPlan().toString()
+
+
+def test_embargo_day_releases_its_cache(spark, embargo_inputs, tmp_path, monkeypatch):
+    """``embargo_day(repack=True)`` persists the classified day for its two
+    writes and releases it on return, also when the blob write fails;
+    ``repack=False`` never persists."""
+    from etl_embargo_spark.plans.embargo_pipeline import embargo_day
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def cached(df):
+        level = df.storageLevel  # read from the session's cache manager
+        return level.useMemory or level.useDisk
+
+    wl = spark.read.parquet(embargo_inputs["whitelist_path"])
+    frames = []
+    real_persist = type(wl).persist
+
+    def spy_persist(self, *args, **kwargs):
+        frames.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(wl), "persist", spy_persist)
+
+    def run(name, **kw):
+        return embargo_day(
+            spark, embargo_inputs["archive_glob"], wl, str(tmp_path / name),
+            embargo_inputs["cutoff_int"], **kw,
+        )
+
+    before = persisted()
+    run("ok", repack=True, repack_dir=str(tmp_path / "ok_blobs"))
+    assert len(frames) == 1 and not cached(frames[0])
+    assert persisted() == before
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a file where the blob directory should be")
+    with pytest.raises(Exception):
+        run("failed", repack=True, repack_dir=str(blocker))
+    assert (tmp_path / "failed").exists()  # the routed write ran first
+    assert len(frames) == 2 and not cached(frames[1])
+    assert persisted() == before
+
+    run("routed_only")
+    assert len(frames) == 2
+    assert persisted() == before
 
 
 def test_embargo_day_repack_requires_repack_dir(spark, embargo_inputs, tmp_path):
