@@ -358,7 +358,10 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands = minhash_candidates(signatures_from_shingles(sh))
         return jaccard_verify_on_shingles(sh, cands, threshold=0.5)
 
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), spark)
+    # no spread_for_cpu: the scan feeds the md5 groupBy shuffle directly
+    # and the shingle kernel runs after it, so a round-robin spread would
+    # parallelize nothing
+    docs = load_table(spark, sf_dir, "documents")
     return exact_collapse_pairs(
         docs, _rep_pairs, {"jaccard": F.lit(1.0)}
     )
@@ -1104,7 +1107,9 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernels at sf0.1); large corpora shard at the minimum exact width
     # (LEV_MAX+1) so block pair windows stay bounded and parallel
     width = LEV_BAND if table_rows(sf_dir, "documents") >= 20_000 else 1 << 20
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), spark).select(
+    # no spread_for_cpu: the block repartition below is the only shuffle
+    # the kernels need; nothing CPU-heavy runs before it
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         "source",
@@ -1135,63 +1140,110 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Driver union-find bound.  Below it, dedup_clusters fetches the edges to
+# the driver and solves them there.  Per edge the driver holds 16 B of
+# Arrow (two int64 columns), then numpy working arrays (the id concat, its
+# sort and inverse) and Python ints (the edge lists and up to two
+# union-find slots): 192 B per edge at peak under tracemalloc, 2.4 s on one
+# core, for 1M random edges over 2M distinct ids (the worst case; one
+# 4-vCPU box).  So the bound caps the driver near 200 MB, 16 MB of it Arrow.
+_UF_MAX_EDGES = 1_000_000
+
+
+def _union_find_labels(a, b):
+    """(ids, reps): every node of the edge list ``a[i] -- b[i]`` (numpy
+    integer arrays) and the smallest id of its connected component.
+
+    Ids are compacted to their rank in ``np.unique`` order, so union by the
+    smaller index keeps the smallest id at every root."""
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = list(range(len(ids)))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    n = len(a)
+    for u, v in zip(inv[:n].tolist(), inv[n:].tolist()):
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+    return ids, ids[roots]
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of a ``localCheckpoint``ed DataFrame.  Only for a
+    checkpoint that nothing reads again: its lineage is gone, so a later
+    read fails instead of recomputing."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 50,
     pointer_doubling: bool = False,
-    broadcast_labels: bool = False,
 ) -> DataFrame:
-    """Connected components over near-dup pairs → (doc_id, cluster) with
-    cluster = min doc_id in the component: the step that turns pairwise
-    near-dup verdicts into keep/drop groups (keep the representative, drop
-    the rest).
+    """Connected components over near-dup pairs (columns ``a``, ``b``) →
+    (doc_id, cluster) with cluster = min doc_id in the component: the step
+    that turns pairwise near-dup verdicts into keep/drop groups (keep the
+    representative, drop the rest).  Pairs with a null end are ignored.
 
-    ``pointer_doubling=True`` adds a label(label(v)) hop each round (one
-    extra node-sized self-join), cutting rounds from O(diameter) to
-    O(log diameter) — the classic pointer-jumping trick.  Near-dup
-    components start as shallow cliques/chains (3-5 rounds) but DEEPEN
-    with near-dup pair density (the r11 sf3 probe measured 10 rounds),
-    so q_dedup_clusters enables the hop; GEOMETRIC components are
-    path-shaped and deep — geo.dbscan_points contracts tiles in-kernel
-    first and runs this loop only on its boundary graph.  The converged
-    labels (component min id) are ALGORITHM-INDEPENDENT, so flipping
-    either flag never changes output.
+    Size switch.  The pair lineage executes ONCE, into an eager
+    ``localCheckpoint``; then at most ``_UF_MAX_EDGES + 1`` edges are
+    fetched to the driver through Arrow.
+    * Below the bound (at most 1M edges: 16 MB of Arrow, ~200 MB of
+      driver memory in all, see the constant), union-find runs on the driver and
+      the labels come back as a local relation built through Arrow — two
+      Spark jobs past the upstream's own stages (the checkpoint and the
+      fetch), and no blocks left behind.
+    * Above it, the distributed pointer-doubling loop below runs on the
+      same checkpoint, so the upstream never runs twice.  It releases
+      every checkpoint but the one the returned labels read.
+    The converged labels (component min id) are ALGORITHM-INDEPENDENT, so
+    the switch and ``pointer_doubling`` never change output.
 
-    ``broadcast_labels=True`` hints the per-round label joins broadcast
-    (the pagerank pattern): correct ONLY when the caller knows the node
-    relation is far below the broadcast budget (dbscan's contracted
-    boundary graph); the dedup family's labels are corpus-sized, so the
-    default keeps shuffle joins.  Measured 0.75 → ~0.3 s/round on a
-    400-node graph (each round collapses to one shuffle).
+    Distributed path: iterative min-label propagation — each round every
+    vertex adopts the smallest label among itself and its neighbors;
+    converged when a round changes nothing.  ``pointer_doubling=True``
+    adds a label(label(v)) hop each round (one extra node-sized
+    self-join), cutting rounds from O(diameter) to O(log diameter) — the
+    classic pointer-jumping trick.  Each round is one shuffle join +
+    groupBy-min (AQE picks a broadcast at runtime when the labels are
+    small), and the label relation is ``localCheckpoint``ed per round —
+    WITHOUT that, the lineage doubles every iteration and Catalyst
+    re-plans (and re-executes) an exponentially growing tree.  The
+    convergence check is a count() per round — driver CONTROL FLOW, not a
+    data pull.  Exhausting ``max_iters`` raises RuntimeError."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
 
-    Iterative min-label propagation — the class of algorithm that is NOT
-    SQL-expressible: each round every vertex adopts the smallest label
-    among itself and its neighbors; converged when a round changes
-    nothing.  Rounds = O(component diameter), and near-dup components are
-    shallow (dup clusters are cliques or short chains), so a handful of
-    rounds suffices at any corpus size.
-
-    Scale mechanics: each round is one shuffle join + groupBy-min, and the
-    label relation is ``localCheckpoint``ed per round — WITHOUT that, the
-    lineage doubles every iteration and Catalyst re-plans (and re-executes)
-    an exponentially growing tree; with it, each round starts from
-    materialized partitions.  The convergence check is a count() per round
-    — one tiny driver scalar, the loop condition itself (this is driver
-    CONTROL FLOW, not a driver-side data pull)."""
-    # CHECKPOINT the input, not persist (r13): every round's join +
-    # convergence count re-PLANS the edge relation, and a persisted
-    # relation keeps its full logical tree — Catalyst re-canonicalizes
-    # the whole upstream pipeline (blocked Levenshtein scoring, tile
-    # kernels) per round, which measured 4-5 s of pure driver planning
-    # on a 61-EDGE boundary graph in q_dbscan (20+ s with one more
-    # kernel level upstream).  An eager localCheckpoint truncates the
-    # plan to ExistingRDD — per-round planning becomes O(loop body),
-    # independent of how deep the pair pipeline is.  The relation is
-    # id-pair-sized at any corpus size, and the loop already runs jobs
-    # at build time (iterative-builder exemption), so the materializing
-    # job is not a new cost class.  Blocks outlive clearCache — the
-    # bench/soak release them between queries (CLAUDE.md).
-    pairs = pairs.localCheckpoint()
+    # CHECKPOINT the input, not persist (r13): the loop re-PLANS the edge
+    # relation every round, and a persisted relation keeps its full
+    # logical tree — Catalyst re-canonicalizes the whole upstream pipeline
+    # per round (4-5 s of driver planning on a 61-edge q_dbscan boundary
+    # graph).  The checkpoint truncates the plan to ExistingRDD, and the
+    # driver fetch reads it instead of re-running the upstream.
+    pairs = pairs.select("a", "b").dropna().localCheckpoint()
+    fetched = pairs.limit(_UF_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= _UF_MAX_EDGES:
+        _drop_checkpoint(pairs)
+        ids, reps = _union_find_labels(
+            fetched.column("a").to_numpy(), fetched.column("b").to_numpy()
+        )
+        id_type = pairs.schema["a"].dataType
+        schema = StructType(
+            [StructField("doc_id", id_type), StructField("cluster", id_type)]
+        )
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"doc_id": ids, "cluster": reps}), schema
+        )
     edges = pairs.selectExpr("a AS src", "b AS dst").unionByName(
         pairs.selectExpr("b AS src", "a AS dst")
     )
@@ -1200,15 +1252,16 @@ def dedup_clusters(
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
-    maybe_bc = F.broadcast if broadcast_labels else (lambda df: df)
+    # every checkpoint the loop makes; all but the last are released
+    checkpoints = [pairs, labels]
     for _ in range(max_iters):
         neighbor_min = (
-            edges.join(maybe_bc(labels.withColumnRenamed("id", "src")), "src")
+            edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
             .agg(F.min("label").alias("nmin"))
             .withColumnRenamed("dst", "id")
         )
-        joined = labels.join(maybe_bc(neighbor_min), "id", "left")
+        joined = labels.join(neighbor_min, "id", "left")
         if pointer_doubling:
             # label(label(v)): every current label IS a node id (labels
             # start as self and only take mins of node ids), so the hop
@@ -1216,7 +1269,7 @@ def dedup_clusters(
             hop = labels.select(
                 F.col("id").alias("label"), F.col("label").alias("hmin")
             )
-            joined = joined.join(maybe_bc(hop), "label", "left")
+            joined = joined.join(hop, "label", "left")
             new_label = F.least(
                 F.col("label"),
                 F.coalesce(F.col("nmin"), F.col("label")),
@@ -1232,30 +1285,37 @@ def dedup_clusters(
         updated = joined.select(
             "id", new_label.alias("new_label"), "label"
         ).localCheckpoint()
+        checkpoints.append(updated)
         changed = updated.filter(F.col("new_label") < F.col("label")).count()
         labels = updated.select("id", F.col("new_label").alias("label"))
         if changed == 0:
             break
     else:
+        for cp in checkpoints:
+            _drop_checkpoint(cp)
         # silent non-convergence would return a component split into
         # several clusters with wrong representatives — fail loudly
         raise RuntimeError(
             f"dedup_clusters did not converge in {max_iters} rounds "
             "(component diameter exceeds max_iters); raise max_iters"
         )
-    # the checkpointed pair blocks (like every per-round label
-    # checkpoint above) are released by the sweep-level block release
-    # (bench._release_session_blocks / soak's session recycle) — there
-    # is no public per-DataFrame API to drop localCheckpoint blocks
+    # the returned labels read only the last round's checkpoint
+    for cp in checkpoints[:-1]:
+        _drop_checkpoint(cp)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster")
     )
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rows-only (iterative — not SQL-expressible): cluster assignment over
-    the union of exact-dup pairs and blocked edit-distance pairs; pytest
-    holds a union-find oracle over the same edges."""
+    """rows-only (not SQL-expressible): cluster assignment over the union
+    of exact-dup pairs and blocked edit-distance pairs; pytest holds a
+    union-find oracle over the same edges.
+
+    The edge relation is id-sized, so :func:`dedup_clusters` solves it on
+    the driver (union-find, ~200 B of driver memory per edge) up to
+    ``_UF_MAX_EDGES`` = 1M edges and runs its distributed pointer-doubling
+    loop only above that; the pair lineage executes once either way."""
     # exact-dup edges as STARS (representative ↔ member), not cliques:
     # connectivity needs only k-1 edges per k-doc group, and a clique
     # expansion of a large dup cluster is O(k²) for nothing — union-find
@@ -1276,12 +1336,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     lev_pairs = q_dedup_levenshtein(spark, sf_dir).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    # unsorted on purpose — see q_dedup_minhash.  pointer_doubling: the
-    # r11 sf3 probe measured the min-label loop at 10 rounds (components
-    # deepen with near-dup density — chains, not just cliques); the
-    # label(label(v)) hop cuts rounds to O(log diameter) for one extra
-    # node-sized join per round, and the converged labels are
-    # algorithm-independent (pins unchanged).
+    # unsorted on purpose — see q_dedup_minhash.  pointer_doubling (the
+    # distributed path only): the r11 sf3 probe measured the min-label
+    # loop at 10 rounds (components deepen with near-dup density —
+    # chains, not just cliques); the label(label(v)) hop cuts rounds to
+    # O(log diameter), and the converged labels are algorithm-independent
+    # (pins unchanged).
     return dedup_clusters(
         exact_pairs.unionByName(lev_pairs).distinct(),
         pointer_doubling=True,

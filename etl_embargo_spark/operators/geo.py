@@ -223,9 +223,10 @@ def dbscan_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: neighbor pairs come from :func:`radius_pairs` (cell-
     blocked exactly-once expansion, cost ~ n * target_degree, never n²);
-    degrees are one map-side-combined count; the component loop runs
-    ONLY over core-core edges (dedup.dedup_clusters' checkpointed
-    min-label propagation); border assignment is one broadcast-sized
+    degrees are one map-side-combined count; components run ONLY over
+    core-core edges (per-tile union-find in-kernel, then
+    dedup.dedup_clusters on the contracted boundary graph, far below its
+    driver union-find bound); border assignment is one broadcast-sized
     join from the symmetric edge list to the core labels.  The pinned
     oracle is the role-level rollup; pytest replays the full algorithm
     brute-force (tests/test_extensions.py::TestDbscan)."""
@@ -335,9 +336,7 @@ def dbscan_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("ra").alias("a"), F.col("rb").alias("b"))
         .distinct()
     )
-    comp = dedup_clusters(
-        bnd, pointer_doubling=True, broadcast_labels=True
-    ).select(
+    comp = dedup_clusters(bnd, pointer_doubling=True).select(
         F.col("doc_id").alias("root"), "cluster"
     )
     # cores whose root never crossed a tile keep the local root as

@@ -70,6 +70,8 @@ DRIVER_WINDOW_FIRST = [
     "q_corpus_dedup",
     "q_dbscan",
     "q_dedup_clusters",
+    "q_dedup_levenshtein",
+    "q_dedup_minhash",
     "q_filename_parse",
     "q_hits",
     "q_kcore",
@@ -77,6 +79,7 @@ DRIVER_WINDOW_FIRST = [
     "q_media_dedup",
     "q_media_features",
     "q_media_framesample",
+    "q_minhash_pairs",
     "q_pagerank",
     "q_tar_roundtrip",
     "q_textrank",
@@ -98,7 +101,6 @@ DRIVER_WINDOW_FIRST = [
     "q_markov_attribution",
     "q_media_storage",
     "q_min_cost_supplier",
-    "q_minhash_pairs",
     "q_mutual_info",
     "q_nation_trade",
     "q_ndcg",
@@ -115,8 +117,6 @@ DRIVER_WINDOW_FIRST = [
     "q_simhash_pairs",
     "q_small_quantity",
     "q_stem",
-    "q_theil",
-    "q_top_supplier",
 ]
 
 # Changed after the current window was already full: drifted queries may

@@ -837,30 +837,83 @@ class TestDedupClusters:
         for rep, members in got.items():
             assert rep == min(members)
 
-    def test_chain_converges_to_one_cluster(self, spark):
+    def test_chain_converges_to_one_cluster(self, spark, monkeypatch):
         """A path graph (worst-case diameter) must still collapse to a
-        single component with the min label."""
-        from etl_embargo_spark.operators.dedup import dedup_clusters
+        single component with the min label — on the driver union-find
+        path and on the distributed path (bound forced to 0 edges)."""
+        from etl_embargo_spark.operators import dedup
 
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(10)], "a long, b long"
         )
-        out = dedup_clusters(pairs).collect()
-        assert {r["cluster"] for r in out} == {0}
-        assert {r["doc_id"] for r in out} == set(range(11))
+        for bound in (dedup._UF_MAX_EDGES, 0):
+            monkeypatch.setattr(dedup, "_UF_MAX_EDGES", bound)
+            for doubling in (False, True):
+                out = dedup.dedup_clusters(
+                    pairs, pointer_doubling=doubling
+                ).collect()
+                assert {r["cluster"] for r in out} == {0}
+                assert {r["doc_id"] for r in out} == set(range(11))
 
-    def test_non_convergence_raises(self, spark):
+    def test_non_convergence_raises(self, spark, monkeypatch):
         """Exhausting max_iters with labels still moving must fail loudly,
-        never return a silently-split component."""
+        never return a silently-split component.  Only the distributed
+        path iterates, so the bound is forced to 0 edges."""
         import pytest
 
-        from etl_embargo_spark.operators.dedup import dedup_clusters
+        from etl_embargo_spark.operators import dedup
 
+        monkeypatch.setattr(dedup, "_UF_MAX_EDGES", 0)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(10)], "a long, b long"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
-            dedup_clusters(pairs, max_iters=3)
+            dedup.dedup_clusters(pairs, max_iters=3)
+
+    def test_releases_checkpoint_blocks(self, spark, monkeypatch):
+        """The driver path leaves no persisted RDD behind; the distributed
+        path keeps only the last round's checkpoint, which the returned
+        labels read.  A failed (non-converged) call keeps nothing."""
+        import pytest
+
+        from etl_embargo_spark.operators import dedup
+
+        jsc = spark.sparkContext._jsc
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(10)] + [(20, 21)], "a long, b long"
+        )
+        want = {(i, 0) for i in range(11)} | {(20, 20), (21, 20)}
+
+        def added(before):
+            return set(jsc.getPersistentRDDs().keySet()) - before
+
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = dedup.dedup_clusters(pairs, pointer_doubling=True)
+        assert added(before) == set()
+        assert {tuple(r) for r in out.collect()} == want
+
+        monkeypatch.setattr(dedup, "_UF_MAX_EDGES", 0)
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = dedup.dedup_clusters(pairs, pointer_doubling=True)
+        assert len(added(before)) == 1
+        assert {tuple(r) for r in out.collect()} == want
+
+        before = set(jsc.getPersistentRDDs().keySet())
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.dedup_clusters(pairs, max_iters=2)
+        assert added(before) == set()
+
+    def test_driver_path_keeps_id_type_and_empty_input(self, spark):
+        """The driver path returns the input's id type and handles an
+        empty edge list (no nodes, no clusters)."""
+        from etl_embargo_spark.operators.dedup import dedup_clusters
+
+        pairs = spark.createDataFrame([(3, 1), (1, 2)], "a int, b int")
+        out = dedup_clusters(pairs)
+        assert [f.dataType.simpleString() for f in out.schema] == ["int", "int"]
+        assert sorted(tuple(r) for r in out.collect()) == [(1, 1), (2, 1), (3, 1)]
+        empty = spark.createDataFrame([], "a long, b long")
+        assert dedup_clusters(empty).collect() == []
 
 
 class TestCorpusDedup:

@@ -144,8 +144,20 @@ class TestExtensionPlans:
         assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
         assert "_block" in plan
         # exactly ONE exchange after the scan: the pinned numbered
-        # repartition that the groupBy reuses (no post-kernel shuffle)
-        assert plan.count("Exchange") <= 2
+        # repartition that the groupBy reuses (no post-kernel shuffle, and
+        # no round-robin spread in front of it)
+        assert plan.count("Exchange") == 1, plan
+        assert "RoundRobinPartitioning" not in plan
+
+    def test_minhash_pairs_no_round_robin_spread(self, spark, sf_dir):
+        """The documents scan feeds the md5 exact-collapse groupBy
+        directly: the shingle kernel runs after that shuffle, so a
+        round-robin spread in front of it would parallelize nothing."""
+        from etl_embargo_spark.operators.dedup import minhash_pairs
+
+        plan = minhash_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan
+        assert "hashpartitioning(_groupingexpression" in plan, plan
 
     def test_ngram_jaccard_band_in_block_key(self, spark, sf_dir):
         """The exact Jaccard variant groups on (lang, source, base-5

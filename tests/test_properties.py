@@ -571,3 +571,88 @@ class TestMediaCodecProperties:
         assert np.array_equal(
             np.frombuffer(got_data, dtype=np.int16), samples
         )
+
+
+def _edge_case_graph(draw):
+    """Edge list over a small id range (negative ids included) so ids
+    collide: random edges (self-loops when both ends agree), one long
+    chain whose ids may run downwards, then duplicates of drawn edges,
+    each possibly reversed, all shuffled."""
+    node = st.integers(min_value=-30, max_value=60)
+    edges = draw(st.lists(st.tuples(node, node), max_size=25))
+    start = draw(node)
+    step = draw(st.sampled_from([1, -1]))
+    length = draw(st.integers(min_value=0, max_value=40))
+    edges += [(start + step * i, start + step * (i + 1)) for i in range(length)]
+    if edges:
+        for a, b in draw(st.lists(st.sampled_from(edges), max_size=10)):
+            edges.append((b, a) if draw(st.booleans()) else (a, b))
+    return draw(st.permutations(edges))
+
+
+edge_lists = st.composite(_edge_case_graph)()
+
+
+def _union_find_oracle(edges) -> dict:
+    """Sequential union-find: node -> smallest id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+class TestClusterProperties:
+    """``dedup.dedup_clusters`` on both sides of its size switch equals a
+    sequential union-find, each representative the minimum of its
+    component."""
+
+    @settings(max_examples=200, deadline=None)
+    @given(edge_lists)
+    @example(edges=[(5, 5)])
+    @example(edges=[])
+    def test_driver_union_find_matches_oracle(self, edges):
+        import numpy as np
+
+        from etl_embargo_spark.operators.dedup import _union_find_labels
+
+        a = np.array([e[0] for e in edges], dtype=np.int64)
+        b = np.array([e[1] for e in edges], dtype=np.int64)
+        ids, reps = _union_find_labels(a, b)
+        assert dict(zip(ids.tolist(), reps.tolist())) == _union_find_oracle(edges)
+
+    def _check(self, spark, edges, bound):
+        from unittest import mock
+
+        from etl_embargo_spark.operators import dedup
+
+        pairs = spark.createDataFrame(edges, "a long, b long")
+        with mock.patch.object(dedup, "_UF_MAX_EDGES", bound):
+            rows = dedup.dedup_clusters(pairs, pointer_doubling=True).collect()
+        got = {r["doc_id"]: r["cluster"] for r in rows}
+        assert len(got) == len(rows), "a node appears twice"
+        assert got == _union_find_oracle(edges)
+
+    @settings(max_examples=20, deadline=None)
+    @given(edge_lists)
+    @example(edges=[(7, 7), (7, 7), (3, 2), (2, 3)])
+    def test_driver_path_matches_oracle(self, spark, edges):
+        from etl_embargo_spark.operators.dedup import _UF_MAX_EDGES
+
+        self._check(spark, edges, _UF_MAX_EDGES)
+
+    @settings(max_examples=4, deadline=None)
+    @given(edge_lists.filter(bool))
+    @example(edges=[(7, 7), (7, 7), (3, 2), (2, 3)])
+    def test_distributed_path_matches_oracle(self, spark, edges):
+        self._check(spark, edges, 0)
+
