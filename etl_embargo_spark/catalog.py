@@ -191,11 +191,6 @@ def _check_schema(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every catalog table from ``sf_dir``."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def table_rows(sf_dir: str, name: str, default: int = 10_000) -> int:
     """Row count of a catalog table from parquet FOOTER metadata — no
     Spark job, no data read (pyarrow opens the footer only).

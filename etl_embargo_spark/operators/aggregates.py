@@ -9,7 +9,7 @@ partial row per (group × partition), not the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_embargo_spark.catalog import load_table
@@ -79,31 +79,18 @@ def rows_checksum(*cols) -> F.Column:
     return F.sum(F.xxhash64(joined).cast("decimal(20,0)")).cast("string")
 
 
-def observed_metrics(df: DataFrame, name: str = "etl_metrics") -> DataFrame:
+def observed_metrics(
+    df: DataFrame, name: str | Observation = "etl_metrics"
+) -> DataFrame:
     """Live-counter form of A3: ``df.observe`` attaches the counters to the
-    job without a second scan — the Spark-native Prometheus analog
-    (collected via a QueryExecutionListener on a cluster)."""
+    job without a second scan — the Spark-native Prometheus analog.
+
+    ``name`` is either a metric name (the values are read from the query
+    execution's observed metrics, or a QueryExecutionListener on a
+    cluster) or a ``pyspark.sql.Observation``, which holds the values
+    once an action on the returned DataFrame has completed."""
     return df.observe(
         name,
-        F.count(F.lit(1)).alias("files_total"),
-        F.sum(F.when(F.col("visibility") == "public", 1).otherwise(0)).alias(
-            "files_public"
-        ),
-        F.sum(F.when(F.col("visibility") == "private", 1).otherwise(0)).alias(
-            "files_private"
-        ),
-    )
-
-
-def observe_with_collector(df: DataFrame, observation) -> DataFrame:
-    """Consumer side of A3's live counters (the reference exposes them via
-    a Prometheus HTTP server, /root/reference/metrics/metrics.go:79-102):
-    attach the same counter expressions to a ``pyspark.sql.Observation``,
-    whose ``get`` yields the values after any action on the returned
-    DataFrame — PySpark's listener-backed observe consumption path, with
-    no second scan of the data."""
-    return df.observe(
-        observation,
         F.count(F.lit(1)).alias("files_total"),
         F.sum(F.when(F.col("visibility") == "public", 1).otherwise(0)).alias(
             "files_public"

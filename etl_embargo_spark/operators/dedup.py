@@ -109,12 +109,6 @@ def signatures_from_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — MINHASH_PERMS-wide MinHash signature
-    per document."""
-    return signatures_from_shingles(shingle_sets(docs))
-
-
 def _bucket_pairs(
     bucketed: DataFrame,
     key_cols: list[str],

@@ -15,8 +15,10 @@ embargo-eligible record category) ∨ (source IP in the whitelist).  The
 whitelist probe is a build-side hash set in the reference
 (/root/reference/embargo_check.go:39-60 build, 105-110 probe) — exactly a
 broadcast hash join, which is how it is expressed here: the dim side is
-``broadcast()``-hinted, so at 100 TB the fact scan never shuffles; the
-classifier is a map-side flag + ``when()`` projection, one stage end-to-end.
+``broadcast()``-hinted, so at 100 TB the fact scan never shuffles.  The
+flagship query reuses the pipeline's one implementation of the rule,
+``plans.embargo_pipeline.classify_entries`` (a broadcast ExistenceJoin flag
++ ``when()`` projection, one stage end-to-end).
 
 Mapping onto the driver's synthetic tables (FIXTURES.md §5): ``lineitem`` is
 the per-record fact (the tar entries), ``l_shipdate`` the record date,
@@ -32,6 +34,7 @@ from pyspark.sql import functions as F
 
 from etl_embargo_spark.catalog import load_table
 from etl_embargo_spark.functions.filenames import date_as_int
+from etl_embargo_spark.plans.embargo_pipeline import classify_entries
 
 # Deterministic stand-ins for "now - 1 year" (embargo.go:313) and the
 # whitelist membership rule, fixed so the DuckDB oracle is reproducible.
@@ -55,41 +58,32 @@ def whitelist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_visibility(
-    fact: DataFrame,
-    wl: DataFrame,
-    cutoff_int: int = DEFAULT_CUTOFF_INT,
-) -> DataFrame:
-    """P4 — annotate each fact row with ``visibility`` ∈ {public, private}.
+def split_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flagship query ``q_split_partition`` — the three-term rule of
+    :func:`~etl_embargo_spark.plans.embargo_pipeline.classify_entries` over
+    the fact table (SURVEY §7 phase 0).
 
-    Broadcast LEFT join (not semi) because the predicate needs membership as
-    a *flag* feeding the OR — one broadcast stage, no shuffle of the fact
-    side, survives any fact-table scale as long as the dim stays broadcastable.
+    The adapter maps ``lineitem`` onto the entry shape the rule reads: the
+    embargo-eligible category becomes a ``web100`` basename, the supplier
+    key the entry's ``local_ip`` and the whitelist's ``ip``, and the age
+    term is ``date_int < DEFAULT_CUTOFF_INT``.  A null ``l_returnflag``
+    stays null through ``basename``, so the category term is null exactly
+    as ``l_returnflag <> 'R'`` is.
     """
-    flagged = fact.join(
-        F.broadcast(wl), fact["l_suppkey"] == wl["wl_key"], "left"
-    )
     date_int = date_as_int("l_shipdate")
-    is_public = (
-        (date_int < F.lit(cutoff_int))
-        | (F.col("l_returnflag") != F.lit(EMBARGO_CATEGORY))
-        | F.col("wl_key").isNotNull()
-    )
-    return flagged.select(
+    entries = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
         date_int.alias("date_int"),
-        F.when(is_public, F.lit("public")).otherwise(F.lit("private")).alias(
-            "visibility"
-        ),
+        F.when(F.col("l_returnflag") == F.lit(EMBARGO_CATEGORY), F.lit("web100"))
+        .otherwise(F.col("l_returnflag"))
+        .alias("basename"),
+        F.col("l_suppkey").cast("string").alias("local_ip"),
     )
-
-
-def split_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship query ``q_split_partition`` — the full classifier over the
-    fact table (SURVEY §7 phase 0)."""
-    fact = load_table(spark, sf_dir, "lineitem")
-    return with_visibility(fact, whitelist(spark, sf_dir))
+    wl = whitelist(spark, sf_dir).select(F.col("wl_key").cast("string").alias("ip"))
+    return classify_entries(
+        entries, wl, F.col("date_int") < F.lit(DEFAULT_CUTOFF_INT)
+    ).select("l_orderkey", "l_linenumber", "date_int", "visibility")
 
 
 def whitelist_semi(spark: SparkSession, sf_dir: str) -> DataFrame:

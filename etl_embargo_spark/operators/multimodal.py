@@ -67,18 +67,6 @@ def _media_width(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def decoder_available() -> bool:
-    """True when a compressed-format image codec is importable.  In this
-    container it is False; the numpy/stdlib decoders below still handle
-    netpbm and PCM WAV for real."""
-    try:  # pragma: no cover - environment-dependent
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def synthetic_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive a media table from ``documents`` with REAL payloads where a
     library-free encoder exists: image rows carry a valid binary P6 PPM

@@ -5,8 +5,9 @@ embargo.go:248-293): archives → explode entries → classify → routed write
 (→ repack).  Each archive is decoded once and nothing is shuffled: the
 scan/explode stage, a broadcast ExistenceJoin projection and the write.
 
-E2 (unembargo/publish, unembargo.go:86-140): last-writer-wins merge of the
-newly-aged-out private records into the public listing.
+E2 (unembargo/publish, unembargo.go:86-140) is composed from the listing
+set operations in ``operators/setops`` (``overwrite_merge``,
+``sync_missing``, ``compare_listings``).
 
 E3 (whitelist refresh, embargo_check.go:39-81): re-derive + re-broadcast the
 dim each batch — deliberately NOT the reference's stale-singleton behavior
@@ -20,7 +21,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_embargo_spark.functions.filenames import parse_date_int
-from etl_embargo_spark.operators.setops import overwrite_merge
 from etl_embargo_spark.sinks.routed_write import write_blobs, write_routed
 from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
 
@@ -124,10 +124,3 @@ def embargo_day(
         classified.unpersist()
     return classified
 
-
-def unembargo_merge(
-    public_listing: DataFrame, aged_out: DataFrame, key: str, payload: list[str]
-) -> DataFrame:
-    """E2 — publish: aged-out private records overwrite the public listing
-    per key (unembargo.go:115-130 delete-then-copy ≡ last-writer-wins)."""
-    return overwrite_merge(public_listing, aged_out, key, payload)

@@ -81,6 +81,7 @@ DRIVER_WINDOW_FIRST = [
     "q_media_framesample",
     "q_minhash_pairs",
     "q_pagerank",
+    "q_split_partition",
     "q_tar_roundtrip",
     "q_textrank",
     "q_embed_quantize",
@@ -116,7 +117,6 @@ DRIVER_WINDOW_FIRST = [
     "q_returned_items",
     "q_simhash_pairs",
     "q_small_quantity",
-    "q_stem",
 ]
 
 # Changed after the current window was already full: drifted queries may

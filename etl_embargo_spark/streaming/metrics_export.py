@@ -2,8 +2,8 @@
 
 The reference exposes its counters over a Prometheus HTTP endpoint
 (/root/reference/metrics/metrics.go:79-102); the batch side of that story
-is ``operators.aggregates.observed_metrics`` / ``observe_with_collector``
-(one-scan ``df.observe`` counters).  This module closes the loop for
+is ``operators.aggregates.observed_metrics`` (one-scan ``df.observe``
+counters).  This module closes the loop for
 STREAMING queries: a ``StreamingQueryListener`` drains the per-micro-batch
 ``observedMetrics`` payloads from progress events into a process-local
 buffer, from which ``counters_relation`` builds a (batch_id, metric, value)

@@ -688,20 +688,17 @@ class TestObservedMetrics:
 
     def test_observation_collector_captures_counters(self, spark, sf_dir):
         """Listener-backed consumption (VERDICT next-round #7): a
-        pyspark.sql.Observation attached via observe_with_collector must
-        hold the counter values after the action completes — the
-        Prometheus-export analog of metrics.go:79-102, with no second
-        scan."""
+        pyspark.sql.Observation passed to observed_metrics must hold the
+        counter values after the action completes — the Prometheus-export
+        analog of metrics.go:79-102, with no second scan."""
         from pyspark.sql import Observation
 
-        from etl_embargo_spark.operators.aggregates import (
-            observe_with_collector,
-        )
+        from etl_embargo_spark.operators.aggregates import observed_metrics
         from etl_embargo_spark.operators.embargo import split_partition
 
         classified = split_partition(spark, sf_dir)
         obs = Observation("etl_metrics")
-        observed = observe_with_collector(classified, obs)
+        observed = observed_metrics(classified, obs)
         n = observed.count()
         got = obs.get
         assert got["files_total"] == n
