@@ -1455,7 +1455,8 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1 exact-dup clique's C(2941,2) pairs through every chunk bucket —
     44 s at sf1, collapsed ~3× faster — and the cap cliff argument from
     the collapse docstring applies verbatim."""
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), spark)
+    # no spread_for_cpu: the scan feeds the md5 groupBy shuffle directly
+    docs = load_table(spark, sf_dir, "documents")
     return exact_collapse_pairs(
         docs,
         lambda reps: simhash_near_dups(simhash_signatures(reps)).select(
@@ -1896,8 +1897,8 @@ def q_incremental_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH band keys are Spark murmur/xxhash — not ANSI-expressible —
     and the verify is exact Jaccard, same determinism class as
     q_dedup_minhash)."""
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), spark)
-    return incremental_near_dedup(docs)
+    # no spread_for_cpu: each branch feeds an md5 groupBy shuffle directly
+    return incremental_near_dedup(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------

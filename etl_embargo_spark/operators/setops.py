@@ -57,10 +57,18 @@ def overwrite_merge(
     union + ``row_number`` over a per-key window ordered by source priority;
     one shuffle on the key, no per-row delete round-trips, idempotent on
     rerun (SURVEY ST3).
+
+    Duplicate keys: each key keeps exactly one row, from ``updates`` when
+    any update carries the key, else from ``base``.  Among that side's
+    rows of the key, the one with the smallest payload wins, comparing
+    the ``payload`` columns in order, ascending, nulls first — so the
+    result does not depend on partitioning or arrival order.
     """
     b = base.select(key, *payload).withColumn("src_priority", F.lit(1))
     u = updates.select(key, *payload).withColumn("src_priority", F.lit(2))
-    w = Window.partitionBy(key).orderBy(F.col("src_priority").desc())
+    w = Window.partitionBy(key).orderBy(
+        F.col("src_priority").desc(), *(F.col(c).asc_nulls_first() for c in payload)
+    )
     return (
         b.unionByName(u)
         .withColumn("rn", F.row_number().over(w))

@@ -17,11 +17,13 @@ flags it as a quirk not to replicate).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_embargo_spark.functions.filenames import parse_date_int
-from etl_embargo_spark.sinks.routed_write import write_blobs, write_routed
+from etl_embargo_spark.sinks.routed_write import remove_dir, write_blobs, write_routed
 from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
 
 
@@ -68,6 +70,19 @@ def classify_entries(
     )
 
 
+def _check_repack_dir(out_dir: str, repack_dir: str | None) -> None:
+    """Refuse a missing ``repack_dir`` or one that equals, contains or
+    lies inside ``out_dir``."""
+    if not repack_dir:
+        raise ValueError("embargo_day(repack=True) requires repack_dir")
+    out, blobs = (os.path.abspath(p.removeprefix("file://")) for p in (out_dir, repack_dir))
+    if os.path.commonpath([out, blobs]) in (out, blobs):
+        raise ValueError(
+            f"embargo_day: repack_dir {repack_dir!r} overlaps out_dir {out_dir!r}; "
+            "each sink replaces its whole directory"
+        )
+
+
 def embargo_day(
     spark: SparkSession,
     archive_glob: str,
@@ -90,8 +105,16 @@ def embargo_day(
     public), and the day still processes.
 
     ``repack=True`` also writes the ``-p.tgz``/``-e.tgz`` archives to
-    ``repack_dir``, which must then be given: the blobs may not land in
-    ``out_dir``, whose root is the routed parquet dataset.
+    ``repack_dir``, which must then be given and must neither equal,
+    contain nor lie inside ``out_dir``: each sink replaces its whole
+    directory, so either would delete the other's output.
+
+    Rerun rule (SURVEY ST3): each call replaces the day.  The routed
+    write is a static overwrite of ``out_dir`` and ``repack_dir`` is
+    removed before the routed write, so no failure point leaves rows or
+    blobs of a previous run, classified under an older whitelist, beside
+    the new routed rows.  A crash leaves an incomplete day, never a
+    stale one.
 
     Job shape: the routed write is one scan → explode (which also derives
     ``local_ip``) → broadcast ExistenceJoin classify → partitioned write,
@@ -101,8 +124,8 @@ def embargo_day(
     the partition that holds it (no shuffle).  The cache is released
     before returning, also when a write fails.
     """
-    if repack and not repack_dir:
-        raise ValueError("embargo_day(repack=True) requires repack_dir")
+    if repack:
+        _check_repack_dir(out_dir, repack_dir)
     dated = read_tar_entries(spark, archive_glob).withColumn(
         "archive_date_int", parse_date_int(F.col("archive"))
     )
@@ -116,6 +139,7 @@ def embargo_day(
     if not repack:
         write_routed(routed, out_dir)
         return classified
+    remove_dir(repack_dir)
     classified.persist()
     try:
         write_routed(routed, out_dir)

@@ -72,15 +72,19 @@ DRIVER_WINDOW_FIRST = [
     "q_dedup_clusters",
     "q_dedup_levenshtein",
     "q_dedup_minhash",
+    "q_dedup_simhash",
     "q_filename_parse",
     "q_hits",
+    "q_incremental_dedup_near",
     "q_kcore",
     "q_label_propagation",
     "q_media_dedup",
     "q_media_features",
     "q_media_framesample",
     "q_minhash_pairs",
+    "q_overwrite_merge",
     "q_pagerank",
+    "q_simhash_pairs",
     "q_split_partition",
     "q_tar_roundtrip",
     "q_textrank",
@@ -113,10 +117,6 @@ DRIVER_WINDOW_FIRST = [
     "q_psi",
     "q_rank_surface",
     "q_rare_collapse",
-    "q_repetition_filter",
-    "q_returned_items",
-    "q_simhash_pairs",
-    "q_small_quantity",
 ]
 
 # Changed after the current window was already full: drifted queries may

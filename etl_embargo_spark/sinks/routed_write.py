@@ -8,14 +8,18 @@ data (the reference's single-scan/two-output structure, embargo.go:149-201),
 and downstream consumers mount ``visibility=public/`` and
 ``visibility=private/`` as the two "buckets".
 
-Idempotency (SURVEY ST3): dynamic partition overwrite — rerunning a day
-replaces exactly that day's partitions, the engine analog of the
-delete-then-copy at unembargo.go:115-130.
+Rerun rule (SURVEY ST3), one for both sinks: a write replaces its whole
+directory, the engine analog of the delete-then-copy at
+unembargo.go:115-130.  Nothing of a previous run survives a rerun, so a
+visibility side the rerun does not write (every entry of a day turned
+public, or private) cannot keep stale rows or blobs.  A crash leaves an
+incomplete directory: the routed dataset then has no ``_SUCCESS`` marker.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -25,29 +29,60 @@ def write_routed(
     out_dir: str,
     partition_cols: tuple[str, ...] = ("visibility",),
 ) -> None:
-    """Single-pass two-way (or N-way) routed write of classified records."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(out_dir)
-    )
+    """Single-pass two-way (or N-way) routed write of classified records.
+    Static overwrite: every partition of a previous write is replaced,
+    written or not."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
+
+
+def remove_dir(path: str) -> None:
+    """Delete the directory ``path`` and everything under it, if it
+    exists.  A file at ``path`` raises NotADirectoryError: it is not a
+    sink's output."""
+    try:
+        shutil.rmtree(path)
+    except FileNotFoundError:
+        pass
 
 
 def write_blobs(df: DataFrame, out_dir: str) -> None:
-    """Emit ``(out_name, content)`` rows as raw files under ``out_dir`` —
-    the K2/K3 upload analog for repacked archives.  Distributed: each
-    executor partition writes its own blobs; ``out_dir`` must be shared
-    storage on a cluster (it is a local dir on local[*])."""
+    """Replace ``out_dir`` with one raw file per ``(out_name, content)``
+    row — the K2/K3 upload analog for repacked archives.
+
+    The driver removes ``out_dir`` first; each executor partition then
+    writes its own blobs (``out_dir`` must be shared storage on a
+    cluster; it is a local dir on local[*]).  A blob is written to a
+    per-task-attempt ``.inprogress`` file and published with
+    ``os.link``, which never replaces an existing name, so each name is
+    published once.  A name that already exists with identical bytes is
+    a retried task and passes; different bytes raise ValueError naming
+    the blob: two tasks packed parts of one (archive, visibility) group,
+    which a repack of an input that splits an archive across partitions
+    does."""
+    remove_dir(out_dir)
 
     def _write_partition(rows) -> None:
+        from pyspark import TaskContext
+
+        attempt = TaskContext.get().taskAttemptId()
         os.makedirs(out_dir, exist_ok=True)
         for row in rows:
             target = os.path.join(out_dir, row["out_name"])
             os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = target + ".inprogress"
+            data = bytes(row["content"])
+            tmp = f"{target}.{attempt}.inprogress"
             with open(tmp, "wb") as f:
-                f.write(bytes(row["content"]))
-            os.replace(tmp, target)  # atomic per-blob commit
+                f.write(data)
+            try:
+                os.link(tmp, target)
+            except FileExistsError:
+                with open(target, "rb") as f:
+                    if f.read() != data:
+                        raise ValueError(
+                            f"write_blobs: {row['out_name']} was packed twice with "
+                            "different bytes; its group is split across tasks"
+                        ) from None
+            finally:
+                os.unlink(tmp)
 
     df.select("out_name", "content").foreachPartition(_write_partition)

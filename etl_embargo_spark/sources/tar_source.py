@@ -24,8 +24,6 @@ from the same ``binaryFile`` row: the repack needs no shuffle.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,40 +200,6 @@ def _make_packer():
     return _pack
 
 
-# One executed-plan tree-string line: tree decoration, optional codegen
-# stage id, node name, the rest.
-_PLAN_LINE = re.compile(r"^([\s:+\-]*)(?:\*\(\d+\) )?(\w+)(.*)$")
-
-
-def _stream_shuffle(plan: str) -> str | None:
-    """The first plan line that shuffles the rows flowing to the plan's
-    root — an ``Exchange`` (ShuffleExchangeExec), AQE's
-    ``ShuffleQueryStage``, or a ReusedExchange of one — or None.  The
-    subtree under a broadcast is skipped: a shuffle there (a ``distinct``
-    whitelist) only builds the broadcast relation.
-
-    This reads the text of ``SparkPlan.treeString`` (node names after the
-    tree decoration, a child indented deeper than its parent), so a
-    change to that format in a later Spark release can blind it."""
-    broadcast_depth = None
-    for line in plan.splitlines():
-        m = _PLAN_LINE.match(line)
-        if not m:
-            continue
-        depth, node, rest = len(m.group(1)), m.group(2), m.group(3)
-        if broadcast_depth is not None:
-            if depth > broadcast_depth:
-                continue
-            broadcast_depth = None
-        if node in ("BroadcastExchange", "BroadcastQueryStage"):
-            broadcast_depth = depth
-        elif node in ("Exchange", "ShuffleQueryStage") or (
-            node == "ReusedExchange" and ", Exchange " in rest
-        ):
-            return line.strip()
-    return None
-
-
 def _make_repacker():
     """Build the per-partition repack generator (nested for by-value
     pickling).  It walks runs of rows with the same ``archive`` and packs
@@ -306,20 +270,15 @@ def repack_archives(entries: DataFrame) -> DataFrame:
     classify, a filter, a cache) keep them.  The input must therefore be
     ``explode_archives`` output carried through narrow operations only.
 
-    Two violations are caught.  An input whose plan shuffles could split a
-    group across tasks that would each write the same ``out_name``, so it
-    is refused with ValueError before any Spark job runs; a group split in
-    two runs of one partition fails its task.  A split with no shuffle is
-    NOT detected: a scan that cuts one archive's rows across partitions
-    (for example a parquet re-read of the routed output whose file is
-    larger than ``maxPartitionBytes``) would write partial blobs.
+    A split group is caught where it would do harm.  Two runs of one
+    group in one partition fail the task here; a group split across
+    tasks (a shuffled input, or a scan that cuts one archive's rows
+    across partitions, such as a parquet re-read of the routed output
+    whose file is larger than ``maxPartitionBytes``) packs one partial
+    blob per task under the same ``out_name``, which
+    :func:`~etl_embargo_spark.sinks.routed_write.write_blobs` refuses
+    because it publishes each name once.
     """
-    shuffle = _stream_shuffle(entries._jdf.queryExecution().executedPlan().treeString())
-    if shuffle is not None:
-        raise ValueError(
-            "repack_archives needs each archive's entries in one partition; "
-            f"its input plan shuffles them: {shuffle}"
-        )
     return entries.select(
         "archive", "visibility", "path", "content", "mode", "mtime"
     ).mapInPandas(

@@ -64,3 +64,39 @@ def embargo_inputs(tmp_path_factory) -> dict:
         assert exp["public"] and exp["private"]
     assert inputs["expected"] != inputs["expected_no_date"]
     return inputs
+
+
+@pytest.fixture(scope="session")
+def write_day():
+    """Factory for tiny hand-made days: ``write_day(root, archives)``
+    writes each ``{archive name: [member basename, ...]}`` archive as a
+    ``.tgz`` under ``root`` and returns the input form of
+    ``perfbench.oracle.expected_embargo`` (``archive_glob``, ``entries``,
+    ``cutoff_int``) without a whitelist.  Every member gets its own path
+    and content, so no two routed rows are equal."""
+    import gzip
+    import hashlib
+    import io
+    import tarfile
+
+    def write(root: str, archives: dict, cutoff_int: int = 20160601) -> dict:
+        os.makedirs(root, exist_ok=True)
+        entries = []
+        for archive, basenames in archives.items():
+            raw = io.BytesIO()
+            with tarfile.open(fileobj=raw, mode="w", format=tarfile.GNU_FORMAT) as tar:
+                for i, base in enumerate(basenames):
+                    data = f"{archive}/{i}/{base}".encode()
+                    info = tarfile.TarInfo(f"m{i}/{base}")
+                    info.size, info.mtime, info.mode = len(data), 1_400_000_000, 0o644
+                    tar.addfile(info, io.BytesIO(data))
+                    entries.append({
+                        "archive": archive, "path": info.name, "basename": base,
+                        "mode": info.mode, "sha": hashlib.sha256(data).hexdigest(),
+                    })
+            with open(os.path.join(root, archive), "wb") as f:
+                f.write(gzip.compress(raw.getvalue(), mtime=0))
+        return {"archive_glob": root, "entries": entries, "cutoff_int": cutoff_int}
+
+    return write
+

@@ -159,6 +159,22 @@ class TestExtensionPlans:
         assert "RoundRobinPartitioning" not in plan
         assert "hashpartitioning(_groupingexpression" in plan, plan
 
+    def test_simhash_pairs_no_round_robin_spread(self, spark, sf_dir):
+        """SimHash runs through the md5 exact-collapse groupBy like
+        MinHash: no round-robin spread in front of that shuffle."""
+        from etl_embargo_spark.operators.dedup import simhash_pairs
+
+        plan = simhash_pairs(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan
+        assert "hashpartitioning(_groupingexpression" in plan, plan
+
+    def test_incremental_dedup_near_no_round_robin_spread(self, spark, sf_dir):
+        """Each branch of the incremental near-dup check starts with the
+        md5 groupBy of the documents scan: no round-robin spread."""
+        plan = _plan(spark, sf_dir, "q_incremental_dedup_near")
+        assert "RoundRobinPartitioning" not in plan
+        assert "hashpartitioning(h#" in plan, plan
+
     def test_ngram_jaccard_band_in_block_key(self, spark, sf_dir):
         """The exact Jaccard variant groups on (lang, source, base-5
         shingle-count band) — the thing that keeps Σ|block|² bounded — and

@@ -656,3 +656,123 @@ class TestClusterProperties:
     def test_distributed_path_matches_oracle(self, spark, edges):
         self._check(spark, edges, 0)
 
+
+# ---------------------------------------------------------------------------
+# embargo_day against the independent three-term oracle, rerun included
+# ---------------------------------------------------------------------------
+
+_WL_IPS = ["10.0.0.1", "10.0.0.2", "2001:db8::1", "2001:db8::a:2"]
+_IPS = st.one_of(
+    st.sampled_from(_WL_IPS),  # whitelistable
+    st.sampled_from(["192.0.2.7", "2001:db8::99"]),  # strangers
+    st.sampled_from(["2001:zz8::1", "2001:db8::1::2", "300.1.2.3x", ""]),  # malformed
+    st.sampled_from(["2001:db8:::1", "2001:db8:::a:2"]),  # the ``:::`` spelling
+)
+_ARCHIVE_STEMS = {
+    "new": "20170301T000000Z-mlab1-sea01-sidestream",
+    "old": "20150814T000000Z-mlab2-lga03-sidestream",
+    "undated": "sidestream-nuq02",
+}
+
+
+@st.composite
+def _member(draw, i):
+    """A sidestream-shaped basename with 0-3 underscores."""
+    ip = draw(_IPS)
+    ext = draw(st.sampled_from(["web100", "paris"]))
+    head, tail = f"20170301T00000{i % 10}Z", f"{i:05d}.{ext}"
+    return [
+        f"{head}{ip}{tail}",
+        f"{head}_{ip}{tail}",
+        f"{head}_{ip}_{tail}",
+        f"{head}_{ip}_x_{tail}",
+    ][draw(st.integers(0, 3))]
+
+
+@st.composite
+def _days(draw):
+    kinds = draw(st.lists(st.sampled_from(sorted(_ARCHIVE_STEMS)), min_size=1, max_size=3))
+    archives = {
+        f"{_ARCHIVE_STEMS[kind]}-{a:04d}.tgz": [
+            draw(_member(i)) for i in range(draw(st.integers(1, 5)))
+        ]
+        for a, kind in enumerate(kinds)
+    }
+    whitelists = draw(st.lists(st.lists(st.sampled_from(_WL_IPS), unique=True), min_size=2, max_size=2))
+    return archives, whitelists
+
+
+class TestEmbargoDayProperty:
+    @settings(max_examples=10, deadline=None)
+    @given(_days())
+    @example((  # every entry turns private on the rerun
+        {"20170301T000000Z-mlab1-sea01-sidestream-0000.tgz": ["20170301T000000Z_10.0.0.1_00000.web100"]},
+        [["10.0.0.1"], []],
+    ))
+    def test_embargo_day_and_rerun_match_oracle(self, spark, write_day, day):
+        """Tiny drawn days (dated new, dated old and undated archives;
+        web100 or not; whitelisted, stranger, malformed and ``:::`` IPs;
+        0-3 underscores) through ``embargo_day(repack=True)``, then a
+        rerun into the same directories under a second drawn whitelist:
+        after each run the routed parquet and the re-read blobs equal the
+        pure-Python three-term rule for that run's whitelist."""
+        from perfbench import oracle
+
+        from etl_embargo_spark.plans.embargo_pipeline import embargo_day
+
+        archives, whitelists = day
+        with tempfile.TemporaryDirectory() as root:
+            inputs = write_day(os.path.join(root, "day"), archives)
+            routed, blobs = os.path.join(root, "routed"), os.path.join(root, "blobs")
+            for wl in whitelists:
+                embargo_day(
+                    spark, inputs["archive_glob"],
+                    spark.createDataFrame([(ip,) for ip in wl], "ip string"),
+                    routed, inputs["cutoff_int"], repack=True, repack_dir=blobs,
+                )
+                expected = oracle.expected_embargo({**inputs, "whitelist": wl})
+                oracle.check_embargo(expected, routed, blobs)
+
+
+# ---------------------------------------------------------------------------
+# overwrite_merge's duplicate-key rule against a pure-Python model
+# ---------------------------------------------------------------------------
+
+
+def _merge_model(base, updates):
+    """Per key: the rows of the highest-priority side that has the key
+    (updates over base), then the smallest payload, nulls first."""
+    best = {}
+    for priority, rows in ((1, base), (2, updates)):
+        for key, *payload in rows:
+            rank = (-priority, [(v is not None, v) for v in payload])
+            if key not in best or rank < best[key][0]:
+                best[key] = (rank, (key, *payload))
+    return sorted(row for _, row in best.values())
+
+
+_listing_rows = st.lists(
+    st.tuples(
+        st.integers(0, 5),
+        st.one_of(st.none(), st.integers(0, 3)),
+        st.one_of(st.none(), st.sampled_from(["a", "b", "c"])),
+    ),
+    max_size=25,
+)
+
+
+class TestOverwriteMergeProperty:
+    @settings(max_examples=15, deadline=None)
+    @given(_listing_rows, _listing_rows)
+    def test_duplicate_keys_match_model(self, spark, base, updates):
+        """Duplicate keys within and across both sides, null payloads
+        included, spread over several partitions: one row per key, chosen
+        by the documented rule."""
+        from etl_embargo_spark.operators.setops import overwrite_merge
+
+        schema = "key int, size int, etag string"
+        b = spark.createDataFrame(base, schema).repartition(3)
+        u = spark.createDataFrame(updates, schema).repartition(2)
+        got = sorted(map(tuple, overwrite_merge(b, u, "key", ["size", "etag"]).collect()))
+        assert got == _merge_model(base, updates)
+

@@ -1,5 +1,5 @@
-"""Scale-property tests: partition pruning on the routed write, dynamic
-overwrite idempotency, and salted-join equivalence — the behaviors that
+"""Scale-property tests: partition pruning on the routed write, rerun
+idempotency, and salted-join equivalence — the behaviors that
 make the engine viable at 100 TB, checked at toy SF."""
 
 from __future__ import annotations
@@ -30,8 +30,10 @@ class TestRoutedWrite:
         assert pub.count() == want
 
     def test_dynamic_overwrite_rerun_converges(self, spark, sf_dir, tmp_path):
-        """ST3: rerunning the same day's write replaces its partitions
-        in-place — same rows after 1 write and after 2."""
+        """ST3: a rerun of the same day's write replaces the whole
+        directory (static overwrite) — same rows after 1 write and after
+        2.  Reruns whose classification changed are covered by
+        ``tests/test_tar_pipeline.py::test_rerun_replaces_the_day``."""
         from etl_embargo_spark.operators.embargo import split_partition
 
         out = str(tmp_path / "routed")

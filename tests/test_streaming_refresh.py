@@ -48,51 +48,6 @@ class TestForeachBatchDimRefresh:
         assert versions == list(range(len(seen)))
 
 
-class TestStreamingEmbargo:
-    def test_streaming_matches_batch_and_is_exactly_once(
-        self, spark, embargo_inputs, tmp_path
-    ):
-        """ST1 on the real data path: streamed classify+routed-sink output
-        of a generated day equals the batch pipeline's classification and
-        the independent oracle, and a rerun with the same checkpoint adds
-        no rows."""
-        from etl_embargo_spark.plans.embargo_pipeline import classify_entries
-        from etl_embargo_spark.sources.tar_source import read_tar_entries
-        from etl_embargo_spark.streaming.archive_stream import (
-            run_streaming_embargo,
-        )
-
-        def rows(df):
-            return sorted(
-                map(tuple, df.select("archive", "path", "local_ip", "visibility").collect()),
-                key=repr,
-            )
-
-        src = embargo_inputs["archive_glob"]
-        wl = spark.read.parquet(embargo_inputs["whitelist_path"])
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        q = run_streaming_embargo(spark, src, wl, out, ckpt)
-        q.awaitTermination(180)
-        got = rows(spark.read.parquet(out))
-
-        batch = classify_entries(read_tar_entries(spark, src), wl)
-        assert got == rows(batch)
-        want = sorted(
-            ((a, p, ip, vis)
-             for vis, side in embargo_inputs["expected_no_date"].items()
-             for a, p, ip, _sha in side),
-            key=repr,
-        )
-        assert got == want
-
-        # rerun with same checkpoint: exactly-once, nothing appended
-        q2 = run_streaming_embargo(spark, src, wl, out, ckpt)
-        q2.awaitTermination(180)
-        assert spark.read.parquet(out).count() == len(got)
-
-
 def _write_events(spark, path: str, rows: list[tuple]) -> None:
     """One parquet file of events rows (event_id, ts_str, user, type, value)."""
     df = spark.createDataFrame(

@@ -256,28 +256,58 @@ def test_repack_runs_without_shuffle(spark, embargo_inputs):
     assert _shuffle_lines(plan) == []
 
 
-def test_repack_refuses_shuffled_input(spark, embargo_inputs):
-    """A shuffled input could split one archive across tasks that write
-    the same ``out_name``; the repack refuses it from the plan alone,
-    before any Spark job runs."""
+def test_repack_refuses_shuffled_input(spark, embargo_inputs, tmp_path):
+    """A shuffled input splits archives across tasks that each pack a
+    partial blob under the same ``out_name``; ``write_blobs`` publishes
+    each name once and refuses the second, different blob.  A shuffle on
+    the broadcast side (a distinct whitelist) keeps every archive where
+    the scan put it, so its blobs are the oracle's."""
+    from perfbench import oracle
+
     from etl_embargo_spark.plans.embargo_pipeline import classify_entries
+    from etl_embargo_spark.sinks.routed_write import write_blobs, write_routed
     from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
 
     shuffled = _classified(spark, embargo_inputs).repartition(8)
-    # a shuffle on the broadcast side (a distinct whitelist) keeps every
-    # archive where the scan put it, so it is accepted
+    with pytest.raises(Exception, match="packed twice with different bytes"):
+        write_blobs(repack_archives(shuffled), str(tmp_path / "shuffled"))
+
     entries = read_tar_entries(spark, embargo_inputs["archive_glob"])
     distinct_wl = spark.read.parquet(embargo_inputs["whitelist_path"]).distinct()
     broadcast_shuffle = classify_entries(entries, distinct_wl)
-    sc = spark.sparkContext
-    sc.setJobGroup("repack-refuses-shuffle", "repack of a shuffled input")
+    routed, blobs = str(tmp_path / "routed"), str(tmp_path / "blobs")
+    write_routed(broadcast_shuffle, routed)
+    write_blobs(repack_archives(broadcast_shuffle), blobs)
+    oracle.check_embargo(embargo_inputs["expected_no_date"], routed, blobs)
+
+
+def test_repack_of_a_split_scan_is_refused(spark, embargo_inputs, tmp_path):
+    """A parquet re-read of the routed output, written in small row groups
+    and read back in many small splits, cuts archives across partitions
+    with no shuffle in the plan; the blob write refuses the partial
+    blobs."""
+    from etl_embargo_spark.sinks.routed_write import write_blobs
+    from etl_embargo_spark.sources.tar_source import repack_archives
+
+    routed = str(tmp_path / "routed")
+    (
+        _classified(spark, embargo_inputs).write.option("parquet.block.row.count.limit", 4)
+        .partitionBy("visibility").parquet(routed)
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
     try:
-        with pytest.raises(ValueError, match="shuffles"):
-            repack_archives(shuffled)
-        repack_archives(broadcast_shuffle)
-        assert list(sc.statusTracker().getJobIdsForGroup("repack-refuses-shuffle")) == []
+        reread = spark.read.parquet(routed)
+        split = reread.rdd.mapPartitions(
+            lambda rows: [sorted({(r["archive"], r["visibility"]) for r in rows})]
+        ).collect()
+        groups = [g for part in split for g in part]
+        assert len(groups) > len(set(groups)), "no group spans two partitions"
+        with pytest.raises(Exception, match="packed twice with different bytes"):
+            write_blobs(repack_archives(reread), str(tmp_path / "blobs"))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, old)
 
 
 def test_repack_groups_within_one_partition(spark):
@@ -386,7 +416,9 @@ def test_generated_embargo_day_end_to_end(spark, embargo_inputs, tmp_path):
 def test_embargo_day_releases_its_cache(spark, embargo_inputs, tmp_path, monkeypatch):
     """``embargo_day(repack=True)`` persists the classified day for its two
     writes and releases it on return, also when the blob write fails;
-    ``repack=False`` never persists."""
+    ``repack=False`` never persists.  A file where the blob directory
+    should be is refused before anything is persisted or written."""
+    from etl_embargo_spark.plans import embargo_pipeline
     from etl_embargo_spark.plans.embargo_pipeline import embargo_day
 
     def persisted():
@@ -419,8 +451,16 @@ def test_embargo_day_releases_its_cache(spark, embargo_inputs, tmp_path, monkeyp
 
     blocker = tmp_path / "blocker"
     blocker.write_text("a file where the blob directory should be")
-    with pytest.raises(Exception):
-        run("failed", repack=True, repack_dir=str(blocker))
+    with pytest.raises(NotADirectoryError):
+        run("blocked", repack=True, repack_dir=str(blocker))
+    assert not (tmp_path / "blocked").exists() and len(frames) == 1
+
+    def failing_write_blobs(df, out_dir):
+        raise RuntimeError("blob store down")
+
+    monkeypatch.setattr(embargo_pipeline, "write_blobs", failing_write_blobs)
+    with pytest.raises(RuntimeError, match="blob store down"):
+        run("failed", repack=True, repack_dir=str(tmp_path / "failed_blobs"))
     assert (tmp_path / "failed").exists()  # the routed write ran first
     assert len(frames) == 2 and not cached(frames[1])
     assert persisted() == before
@@ -446,6 +486,109 @@ def test_embargo_day_repack_requires_repack_dir(spark, embargo_inputs, tmp_path)
             repack=True,
         )
     assert not out.exists()
+
+
+# --- reruns: each embargo_day call replaces the day ---------------------
+
+ONE_IP = "10.1.2.3"
+
+
+def _rerun_day(day, embargo_inputs, write_day, root):
+    """``(inputs, whitelist)``: the generated day with its whitelist, or a
+    one-archive day of web100 entries that all carry one IP."""
+    if day == "generated":
+        return embargo_inputs, list(embargo_inputs["whitelist"])
+    stamp = "20170301T000000Z"
+    inputs = write_day(root, {
+        f"{stamp}-mlab1-sea01-sidestream-0000.tgz":
+            [f"{stamp}_{ONE_IP}_{i:05d}.web100" for i in range(3)],
+    })
+    return inputs, [ONE_IP]
+
+
+def _embargo(spark, inputs, whitelist, routed, blobs):
+    from perfbench import oracle
+
+    from etl_embargo_spark.plans.embargo_pipeline import embargo_day
+
+    embargo_day(
+        spark, inputs["archive_glob"], spark.createDataFrame([(ip,) for ip in whitelist], "ip string"),
+        routed, inputs["cutoff_int"], repack=True, repack_dir=blobs,
+    )
+    return oracle.expected_embargo({**inputs, "whitelist": whitelist})
+
+
+@pytest.mark.parametrize("change", ["shrinks", "grows"])
+@pytest.mark.parametrize("day", ["one_archive", "generated"])
+def test_rerun_replaces_the_day(spark, embargo_inputs, write_day, tmp_path, day, change):
+    """A rerun after the whitelist changed leaves exactly the new
+    classification in both outputs: no visibility side, row or blob of
+    the first run survives, whichever side the rerun no longer writes."""
+    from perfbench import oracle
+
+    inputs, full = _rerun_day(day, embargo_inputs, write_day, str(tmp_path / "day"))
+    small = full[1::2]
+    first, second = (full, small) if change == "shrinks" else (small, full)
+    routed, blobs = str(tmp_path / "routed"), str(tmp_path / "blobs")
+    want = _embargo(spark, inputs, first, routed, blobs)
+    oracle.check_embargo(want, routed, blobs)
+    rerun = _embargo(spark, inputs, second, routed, blobs)
+    assert rerun != want
+    oracle.check_embargo(rerun, routed, blobs)
+
+
+@pytest.mark.parametrize("day", ["one_archive", "generated"])
+def test_crash_between_sinks_leaves_no_stale_blob(
+    spark, embargo_inputs, write_day, tmp_path, monkeypatch, day
+):
+    """A rerun under a shrunk whitelist that dies between the routed write
+    and the blob write: no blob of the first run survives, and no routed
+    public row is private under the new whitelist."""
+    from perfbench import oracle
+
+    from etl_embargo_spark.plans import embargo_pipeline
+
+    inputs, full = _rerun_day(day, embargo_inputs, write_day, str(tmp_path / "day"))
+    routed, blobs = str(tmp_path / "routed"), str(tmp_path / "blobs")
+    _embargo(spark, inputs, full, routed, blobs)
+    assert os.listdir(blobs)
+
+    def crash(df, out_dir):
+        raise RuntimeError("crash between the sinks")
+
+    monkeypatch.setattr(embargo_pipeline, "write_blobs", crash)
+    with pytest.raises(RuntimeError, match="crash between the sinks"):
+        _embargo(spark, inputs, full[1::2], routed, blobs)
+    assert not os.path.exists(blobs)
+    # the routed write completed, with the new classification only
+    want = oracle.expected_embargo({**inputs, "whitelist": full[1::2]})
+    assert _oracle_rows(spark.read.parquet(routed)) == want
+
+
+@pytest.mark.parametrize("where", ["same", "inside", "contains"])
+def test_embargo_day_refuses_overlapping_dirs(spark, embargo_inputs, tmp_path, where):
+    """Both sinks delete their directory, so a ``repack_dir`` that equals,
+    lies inside or contains ``out_dir`` is refused before any job runs.
+    A sibling that only shares a name prefix is accepted."""
+    from etl_embargo_spark.plans.embargo_pipeline import _check_repack_dir, embargo_day
+
+    out = tmp_path / "day" / "routed"
+    blobs = {"same": out, "inside": out / "blobs", "contains": out.parent}[where]
+    wl = spark.read.parquet(embargo_inputs["whitelist_path"])
+    sc = spark.sparkContext
+    sc.setJobGroup("overlapping-dirs", "embargo_day with overlapping sinks")
+    try:
+        with pytest.raises(ValueError, match="overlaps"):
+            embargo_day(
+                spark, embargo_inputs["archive_glob"], wl, str(out),
+                embargo_inputs["cutoff_int"], repack=True, repack_dir=str(blobs),
+            )
+        assert list(sc.statusTracker().getJobIdsForGroup("overlapping-dirs")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not (tmp_path / "day").exists()
+    _check_repack_dir(str(out), str(out) + "_blobs")
+    _check_repack_dir(f"file://{out}", str(out.parent / "blobs"))
 
 
 @pytest.mark.parametrize("scheme", ["plain", "file"])
