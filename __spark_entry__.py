@@ -3,7 +3,9 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).  ``tests/test_oracle_parity.py`` runs the
+same comparison (``etl_embargo_spark/parity.py``) for every registered
+query on every test run.
 
 All real logic lives in the ``etl_embargo_spark`` package; this module just
 re-exports the registry (etl_embargo_spark/registry.py).

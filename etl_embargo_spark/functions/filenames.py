@@ -74,17 +74,24 @@ def date_as_int(ts: Column | str) -> Column:
 
 
 def parse_date_int(date_str: Column | str) -> Column:
-    """F9 — ``strconv.Atoi(name[0:8])`` analog: 8-char prefix → int, null on
-    non-numeric input (the reference's error path skips the file).
+    """F9 — ``strconv.Atoi(name[0:8])`` analog: 8-char prefix → int, null
+    unless all 8 characters are ASCII digits (the reference's error path
+    skips the file).
 
     Reference: /root/reference/embargo.go:272-276, embargo.go:307-311.
 
-    ``try_cast`` (not ``cast``): under Spark 4's ANSI mode a malformed
-    string must yield null — the reference's skip-on-error path — not abort
-    the job.
+    Deviation (deliberate): Go's ``Atoi`` accepts a sign, so ``+2017010``
+    and ``-1234567`` parse there, and Spark's cast to int also trims a
+    space-padded prefix.  Each such value lies below any cutoff, so the
+    archive would count as old and every entry would be published.  Here
+    they are null like any other non-digit prefix: the archive is
+    undated and the date term drops out of the three-term rule.  The cast
+    of eight ASCII digits cannot fail, so it cannot abort the job under
+    ANSI mode.
     """
     col = F.col(date_str) if isinstance(date_str, str) else date_str
-    return F.substring(col, 1, 8).try_cast("int")
+    d8 = F.substring(col, 1, 8)
+    return F.when(d8.rlike("^[0-9]{8}$"), d8.cast("int"))
 
 
 def embargo_rename(name: Column | str) -> Column:

@@ -4,8 +4,8 @@ For every registered query: run the Spark DataFrame and the oracle SQL on
 the same parquet tables, then compare row count, column-name set, and an
 order-insensitive canonical form of the values (columns sorted by name,
 every value canonicalized to a string, rows sorted).  This mirrors the
-driver's CORRECTNESS check (see __spark_entry__.py docstring) so parity
-breaks are caught in pytest before a round ends.
+driver's check (see the __spark_entry__.py docstring);
+tests/test_oracle_parity.py runs it for every registered query.
 """
 
 from __future__ import annotations

@@ -23,7 +23,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_embargo_spark.functions.filenames import parse_date_int
-from etl_embargo_spark.sinks.routed_write import remove_dir, write_blobs, write_routed
+from etl_embargo_spark.sinks.routed_write import (
+    local_path,
+    remove_dir,
+    write_blobs,
+    write_routed,
+)
 from etl_embargo_spark.sources.tar_source import read_tar_entries, repack_archives
 
 
@@ -71,11 +76,16 @@ def classify_entries(
 
 
 def _check_repack_dir(out_dir: str, repack_dir: str | None) -> None:
-    """Refuse a missing ``repack_dir`` or one that equals, contains or
-    lies inside ``out_dir``."""
+    """Refuse a missing or non-local ``repack_dir`` (see
+    :func:`~etl_embargo_spark.sinks.routed_write.local_path`), or one that
+    equals, contains or lies inside ``out_dir``."""
     if not repack_dir:
         raise ValueError("embargo_day(repack=True) requires repack_dir")
-    out, blobs = (os.path.abspath(p.removeprefix("file://")) for p in (out_dir, repack_dir))
+    blobs = os.path.abspath(local_path(repack_dir))
+    try:
+        out = os.path.abspath(local_path(out_dir))
+    except ValueError:
+        return  # out_dir is remote storage, which no local directory overlaps
     if os.path.commonpath([out, blobs]) in (out, blobs):
         raise ValueError(
             f"embargo_day: repack_dir {repack_dir!r} overlaps out_dir {out_dir!r}; "
@@ -102,12 +112,18 @@ def embargo_day(
     the reference error out and skip the archive (embargo.go:272-276); here
     ``archive_date_int`` is null, the date term drops out of the OR, and
     eligible records classify **private** — conservative (nothing leaks
-    public), and the day still processes.
+    public), and the day still processes.  A name is dated only when its
+    first 8 characters are ASCII digits.  Go's ``Atoi`` also accepts a
+    signed prefix (``+2017010``, ``-1234567``), and Spark's int cast a
+    space-padded one; either reads as older than any cutoff and would
+    publish the archive's web100 entries, so here they are undated too
+    (:func:`~etl_embargo_spark.functions.filenames.parse_date_int`).
 
     ``repack=True`` also writes the ``-p.tgz``/``-e.tgz`` archives to
-    ``repack_dir``, which must then be given and must neither equal,
-    contain nor lie inside ``out_dir``: each sink replaces its whole
-    directory, so either would delete the other's output.
+    ``repack_dir``, which must then be given as a local path or
+    ``file://`` URI and must neither equal, contain nor lie inside
+    ``out_dir``: each sink replaces its whole directory, so either would
+    delete the other's output.
 
     Rerun rule (SURVEY ST3): each call replaces the day.  The routed
     write is a static overwrite of ``out_dir`` and ``repack_dir`` is

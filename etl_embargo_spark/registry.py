@@ -51,95 +51,8 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     _REGISTRY[name] = (fn, oracle)
 
 
-# Driver-window rotation — STANDING POLICY from round 9 on (VERDICT r8
-# #2): the driver's per-round correctness artifact covers only the
-# FIRST 50 entries of queries(), and after round 8 the rotation is
-# complete (252/252 driver-checked).  Each round's window is GENERATED
-# by `python tools/attest.py --window 50`: never-checked and drifted
-# queries first (they MUST ride — tests/test_attestations.py), then
-# everything else oldest-attestation-first so no query's driver row
-# rots beyond ~5 rounds.  tests/test_attestations.py asserts this list
-# equals the tool's output; regenerate it after any builder/oracle
-# edit.  Round 13 start: no never-checked / no drift (the r12 window
-# landed 50/50 green and the snapshot→refresh boundary was closed at
-# round start), so the whole window is the oldest-attestation drain —
-# the r7-era block (q_embed_quantize … q_zipf_fit) plus the first of
-# the r8 block.  This round's own builder edits re-front as drift;
-# regenerate before round end.
-DRIVER_WINDOW_FIRST = [
-    "q_corpus_dedup",
-    "q_dbscan",
-    "q_dedup_clusters",
-    "q_dedup_levenshtein",
-    "q_dedup_minhash",
-    "q_dedup_simhash",
-    "q_filename_parse",
-    "q_hits",
-    "q_incremental_dedup_near",
-    "q_kcore",
-    "q_label_propagation",
-    "q_media_dedup",
-    "q_media_features",
-    "q_media_framesample",
-    "q_minhash_pairs",
-    "q_overwrite_merge",
-    "q_pagerank",
-    "q_simhash_pairs",
-    "q_split_partition",
-    "q_tar_roundtrip",
-    "q_textrank",
-    "q_embed_quantize",
-    "q_embedding_pairs",
-    "q_excess_shippers",
-    "q_feature_hash",
-    "q_hll_merge",
-    "q_idle_customers",
-    "q_important_parts",
-    "q_incremental_dedup",
-    "q_inverted_index",
-    "q_jaccard_users",
-    "q_kmeans",
-    "q_large_orders",
-    "q_local_volume",
-    "q_logreg",
-    "q_market_share",
-    "q_markov_attribution",
-    "q_media_storage",
-    "q_min_cost_supplier",
-    "q_mutual_info",
-    "q_nation_trade",
-    "q_ndcg",
-    "q_order_count_dist",
-    "q_pack_contexts",
-    "q_part_supplier_count",
-    "q_perplexity",
-    "q_priority_count",
-    "q_psi",
-    "q_rank_surface",
-    "q_rare_collapse",
-]
-
-# Changed after the current window was already full: drifted queries may
-# ride here when the 50 slots are taken; the NEXT round's window swap
-# MUST front this queue first, then empty it.  Empty since round 9 —
-# the window generator fronts drift automatically.
-DRIVER_QUEUE_NEXT: list[str] = []
-
-
 def queries() -> dict[str, QueryFn]:
-    front = {
-        name: _REGISTRY[name][0]
-        for name in DRIVER_WINDOW_FIRST
-        if name in _REGISTRY
-    }
-    return {
-        **front,
-        **{
-            name: fn
-            for name, (fn, _) in _REGISTRY.items()
-            if name not in front
-        },
-    }
+    return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def _sql_literal(v: object) -> str:

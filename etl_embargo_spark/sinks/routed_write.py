@@ -19,6 +19,7 @@ incomplete directory: the routed dataset then has no ``_SUCCESS`` marker.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame
@@ -35,12 +36,24 @@ def write_routed(
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
 
 
+def local_path(path: str) -> str:
+    """The local filesystem path of a blob directory: ``path`` itself, or
+    the absolute path of a ``file://`` URI.  Any other scheme raises
+    ValueError: the blob sink removes and writes with local file calls,
+    which would read ``gs://b/x`` as the relative path ``gs:/b/x``."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path) is None:
+        return path
+    if path.startswith("file:///"):
+        return path.removeprefix("file://")
+    raise ValueError(f"blob directory {path!r} is not a local path or file:// URI")
+
+
 def remove_dir(path: str) -> None:
-    """Delete the directory ``path`` and everything under it, if it
-    exists.  A file at ``path`` raises NotADirectoryError: it is not a
-    sink's output."""
+    """Delete the local directory ``path`` (see :func:`local_path`) and
+    everything under it, if it exists.  A file at ``path`` raises
+    NotADirectoryError: it is not a sink's output."""
     try:
-        shutil.rmtree(path)
+        shutil.rmtree(local_path(path))
     except FileNotFoundError:
         pass
 
@@ -58,7 +71,9 @@ def write_blobs(df: DataFrame, out_dir: str) -> None:
     a retried task and passes; different bytes raise ValueError naming
     the blob: two tasks packed parts of one (archive, visibility) group,
     which a repack of an input that splits an archive across partitions
-    does."""
+    does.  ``out_dir`` is a local path or ``file://`` URI
+    (:func:`local_path`)."""
+    out_dir = local_path(out_dir)
     remove_dir(out_dir)
 
     def _write_partition(rows) -> None:

@@ -834,23 +834,42 @@ class TestDedupClusters:
         for rep, members in got.items():
             assert rep == min(members)
 
+    # Spark jobs of the distributed path (bound forced to 0) on the 11-node
+    # chain: 104 with pointer doubling off, in every run; with doubling on,
+    # 60 plus one job for each of the 6 rounds in which AQE does not reuse
+    # a label exchange (61-65 over 23 runs at local[4] and local[8]), so
+    # at most 66.
+    # No benchmark workload reaches this path, so a regression or a
+    # bounded-round rewrite shows only here.
+    _CHAIN_MAX_JOBS = {False: 104, True: 66}
+
     def test_chain_converges_to_one_cluster(self, spark, monkeypatch):
         """A path graph (worst-case diameter) must still collapse to a
         single component with the min label — on the driver union-find
-        path and on the distributed path (bound forced to 0 edges)."""
+        path and on the distributed path (bound forced to 0 edges), the
+        latter within its measured Spark job count."""
         from etl_embargo_spark.operators import dedup
 
+        sc = spark.sparkContext
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(10)], "a long, b long"
         )
         for bound in (dedup._UF_MAX_EDGES, 0):
             monkeypatch.setattr(dedup, "_UF_MAX_EDGES", bound)
             for doubling in (False, True):
-                out = dedup.dedup_clusters(
-                    pairs, pointer_doubling=doubling
-                ).collect()
+                group = f"chain-bound{bound}-doubling{doubling}"
+                sc.setJobGroup(group, "dedup_clusters on an 11-node chain")
+                try:
+                    out = dedup.dedup_clusters(
+                        pairs, pointer_doubling=doubling
+                    ).collect()
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
                 assert {r["cluster"] for r in out} == {0}
                 assert {r["doc_id"] for r in out} == set(range(11))
+                if bound == 0:
+                    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                    assert jobs <= self._CHAIN_MAX_JOBS[doubling], (doubling, jobs)
 
     def test_non_convergence_raises(self, spark, monkeypatch):
         """Exhausting max_iters with labels still moving must fail loudly,

@@ -132,32 +132,44 @@ class TestFilenameGrammarProperties:
         )
     )
     def test_parse_date_int_on_digits(self, spark, digit_strings):
+        """Eight or more digits parse their first 8; shorter strings have
+        no date prefix and yield null."""
         df = spark.createDataFrame([(s,) for s in digit_strings], "d string")
         rows = df.select("d", fn.parse_date_int("d").alias("v")).collect()
         for r in rows:
-            assert r["v"] == int(r["d"][:8])
+            assert r["v"] == (int(r["d"][:8]) if len(r["d"]) >= 8 else None)
 
     @settings(max_examples=10, deadline=None)
     @given(
         st.lists(
-            st.text(alphabet=NAME_ALPHABET, min_size=1, max_size=10).filter(
-                lambda s: not s[:1].isdigit()
+            st.one_of(
+                st.text(alphabet=NAME_ALPHABET, min_size=1, max_size=10),
+                st.builds(
+                    lambda pad, digits, tail: pad + digits + tail,
+                    st.sampled_from(["", " ", "+", "-", "0", "\t"]),
+                    st.text(alphabet="0123456789", min_size=6, max_size=8),
+                    st.sampled_from(["", " ", "T000000Z-a.tgz", "x"]),
+                ),
             ),
             min_size=1,
             max_size=30,
         )
     )
+    @example(bad_strings=[
+        " 2017010T-a.tgz", "+2017010-a.tgz", "-1234567-a.tgz", "2017010 x",
+        "\uff12\uff10\uff11\uff17\uff10\uff13\uff10\uff11-a.tgz",  # non-ASCII digits
+    ])
     def test_parse_date_int_malformed_is_null(self, spark, bad_strings):
-        """Non-numeric prefixes must yield null (the reference's
-        skip-on-error path, embargo.go:272-276), never abort the job."""
+        """A prefix that is not 8 ASCII digits yields null — signed and
+        space-padded numbers included, which Go's ``Atoi`` and Spark's int
+        cast both accept — and never aborts the job (the reference's
+        skip-on-error path, embargo.go:272-276)."""
         df = spark.createDataFrame([(s,) for s in bad_strings], "d string")
         rows = df.select("d", fn.parse_date_int("d").alias("v")).collect()
         for r in rows:
-            s8 = r["d"][:8].strip()
-            # model: Atoi-like — sign + digits only
-            is_numeric = s8.lstrip("+-").isdigit() and s8.lstrip("+-") != ""
-            if not is_numeric:
-                assert r["v"] is None, f"parse({r['d']!r}) -> {r['v']}"
+            s8 = r["d"][:8]
+            dated = len(s8) == 8 and all(c in "0123456789" for c in s8)
+            assert r["v"] == (int(s8) if dated else None), f"parse({r['d']!r}) -> {r['v']}"
 
     @settings(max_examples=10, deadline=None)
     @given(
@@ -669,9 +681,17 @@ _IPS = st.one_of(
     st.sampled_from(["2001:db8:::1", "2001:db8:::a:2"]),  # the ``:::`` spelling
 )
 _ARCHIVE_STEMS = {
-    "new": "20170301T000000Z-mlab1-sea01-sidestream",
-    "old": "20150814T000000Z-mlab2-lga03-sidestream",
-    "undated": "sidestream-nuq02",
+    "new": ["20170301T000000Z-mlab1-sea01-sidestream"],
+    "old": ["20150814T000000Z-mlab2-lga03-sidestream"],
+    "undated": ["sidestream-nuq02"],
+    # numbers that Go's Atoi or Spark's int cast would read as a date
+    # older than any cutoff; the oracle calls them undated
+    "signed": [
+        " 2017010T000000Z-mlab1-sea01-sidestream",
+        "+2017010T000000Z-mlab1-sea01-sidestream",
+        "-1234567T000000Z-mlab1-sea01-sidestream",
+        "2017010 T000000Z-mlab1-sea01-sidestream",
+    ],
 }
 
 
@@ -693,7 +713,7 @@ def _member(draw, i):
 def _days(draw):
     kinds = draw(st.lists(st.sampled_from(sorted(_ARCHIVE_STEMS)), min_size=1, max_size=3))
     archives = {
-        f"{_ARCHIVE_STEMS[kind]}-{a:04d}.tgz": [
+        f"{draw(st.sampled_from(_ARCHIVE_STEMS[kind]))}-{a:04d}.tgz": [
             draw(_member(i)) for i in range(draw(st.integers(1, 5)))
         ]
         for a, kind in enumerate(kinds)
@@ -709,10 +729,17 @@ class TestEmbargoDayProperty:
         {"20170301T000000Z-mlab1-sea01-sidestream-0000.tgz": ["20170301T000000Z_10.0.0.1_00000.web100"]},
         [["10.0.0.1"], []],
     ))
+    @example((  # a signed or padded prefix is undated, so these stay private
+        {
+            f"{stem}-{a:04d}.tgz": [f"20170301T00000{a}Z_192.0.2.7_00000.web100"]
+            for a, stem in enumerate(_ARCHIVE_STEMS["signed"])
+        },
+        [[], ["10.0.0.1"]],
+    ))
     def test_embargo_day_and_rerun_match_oracle(self, spark, write_day, day):
-        """Tiny drawn days (dated new, dated old and undated archives;
-        web100 or not; whitelisted, stranger, malformed and ``:::`` IPs;
-        0-3 underscores) through ``embargo_day(repack=True)``, then a
+        """Tiny drawn days (dated new, dated old, undated, and signed or
+        space-padded archive names; web100 or not; whitelisted, stranger,
+        malformed and ``:::`` IPs; 0-3 underscores) through ``embargo_day(repack=True)``, then a
         rerun into the same directories under a second drawn whitelist:
         after each run the routed parquet and the re-read blobs equal the
         pure-Python three-term rule for that run's whitelist."""

@@ -591,6 +591,42 @@ def test_embargo_day_refuses_overlapping_dirs(spark, embargo_inputs, tmp_path, w
     _check_repack_dir(f"file://{out}", str(out.parent / "blobs"))
 
 
+def test_file_uri_repack_dir_is_replaced_on_rerun(spark, embargo_inputs, tmp_path):
+    """A ``file://`` repack_dir names the same local directory as its
+    path: a rerun after the whitelist shrinks replaces the blobs there,
+    and no relative ``file:`` directory appears under the cwd of the
+    driver or of a Python worker."""
+    from perfbench import oracle
+
+    routed, blobs = str(tmp_path / "routed"), str(tmp_path / "blobs")
+    full = list(embargo_inputs["whitelist"])
+    first = _embargo(spark, embargo_inputs, full, routed, f"file://{blobs}")
+    oracle.check_embargo(first, routed, blobs)
+    rerun = _embargo(spark, embargo_inputs, full[1::2], routed, f"file://{blobs}")
+    assert rerun != first
+    oracle.check_embargo(rerun, routed, blobs)
+    worker_cwd = spark.sparkContext.parallelize([0], 1).map(lambda _: os.getcwd()).first()
+    for cwd in {os.getcwd(), worker_cwd}:
+        assert not os.path.exists(os.path.join(cwd, "file:" + blobs))
+
+
+def test_remote_repack_dir_is_refused(spark, embargo_inputs, tmp_path):
+    """The blob sink writes with local file calls, so a repack_dir on
+    another scheme is refused before any Spark job runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("remote-repack-dir", "embargo_day with a gs:// repack_dir")
+    try:
+        with pytest.raises(ValueError, match="not a local path"):
+            _embargo(
+                spark, embargo_inputs, list(embargo_inputs["whitelist"]),
+                str(tmp_path / "routed"), "gs://bucket/blobs",
+            )
+        assert list(sc.statusTracker().getJobIdsForGroup("remote-repack-dir")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not (tmp_path / "routed").exists()
+
+
 @pytest.mark.parametrize("scheme", ["plain", "file"])
 def test_connectors_accept_uri_schemes(spark, embargo_inputs, tmp_path, scheme):
     """The connectors must not be hardwired to bare local paths: the tar
