@@ -16,6 +16,9 @@ anything:
   normalizer, embedding kernels) moves batches, never rows.
 * maxPartitionBytes 128m — parquet scan splits sized so one task's input fits
   comfortably in executor memory at any SF.
+* codegen cache of 1024 classes — Spark's default of 100 is smaller than one
+  job's working set, so every warm job compiled its code again (see
+  ``CODEGEN_CACHE_MAX_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -23,6 +26,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100).  Guava splits the bound across its 4 segments, so each
+# segment evicts past about 25 classes.  One job's working set is larger:
+# the first corpus_dedup job compiles 112 distinct classes and the first
+# embargo_publish job 65-67.  At the default every later corpus_dedup job
+# compiled 55-75 of them again through Janino (embargo_publish 0-21,
+# varying between probes), and the JIT then compiled the reloaded classes
+# again.  At 1024 warm jobs of both workloads compile 0 classes, and
+# metaspace is unchanged (161-167 MB used after three jobs of either
+# workload, at either bound).  1024 / 4 segments = 256 per segment, so
+# one segment alone holds all 179 classes of both workloads in one
+# session.  The conf is static: CodeGenerator reads it once per JVM, so
+# only a session built here gets it (``tune_for_session`` cannot set it).
+CODEGEN_CACHE_MAX_ENTRIES = 1024
 
 
 def _int_env(name: str, default: int) -> int:
@@ -61,6 +80,7 @@ def get_spark(app_name: str = "etl_embargo_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     return builder.getOrCreate()
 
@@ -146,7 +166,10 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally provided session.
 
     The driver harness passes its own SparkSession to ``entry``/``queries``;
-    only conf that is legal to set post-startup is touched here.
+    only conf that is legal to set post-startup is touched here.  The
+    codegen cache bound (``CODEGEN_CACHE_MAX_ENTRIES``) is not: it is a
+    static conf that ``CodeGenerator`` reads once per JVM, so a session
+    built elsewhere keeps its own.
     """
     rt = {
         "spark.sql.adaptive.enabled": "true",

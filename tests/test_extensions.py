@@ -837,8 +837,8 @@ class TestDedupClusters:
     # Spark jobs of the distributed path (bound forced to 0) on the 11-node
     # chain: 104 with pointer doubling off, in every run; with doubling on,
     # 60 plus one job for each of the 6 rounds in which AQE does not reuse
-    # a label exchange (61-65 over 23 runs at local[4] and local[8]), so
-    # at most 66.
+    # the label broadcast (61-65 over 23 runs at local[4] and local[8]), so
+    # at most 66.  Why, see the test's docstring.
     # No benchmark workload reaches this path, so a regression or a
     # bounded-round rewrite shows only here.
     _CHAIN_MAX_JOBS = {False: 104, True: 66}
@@ -847,7 +847,19 @@ class TestDedupClusters:
         """A path graph (worst-case diameter) must still collapse to a
         single component with the min label — on the driver union-find
         path and on the distributed path (bound forced to 0 edges), the
-        latter within its measured Spark job count."""
+        latter within its measured Spark job count.
+
+        Why the doubling count varies (each round's final plan, dumped
+        inside this job group; rounds 2-6 of 20 runs at local[4]): both
+        sides of the ``edges ⋈ labels`` join start as shuffles, and AQE
+        turns the join into a broadcast of whichever side's shuffle stage
+        finishes first.  When that is ``labels`` (88 rounds), the hop join
+        reuses the label broadcast: 9 jobs.  When it is ``edges`` (12
+        rounds), the hop join reuses only the label shuffle and broadcasts
+        it again: 10 jobs.  A broadcast hint on ``labels`` would fix the
+        count, but this path runs only above 1M edges, where the
+        node-sized label relation must not be broadcast, so the bound
+        stays."""
         from etl_embargo_spark.operators import dedup
 
         sc = spark.sparkContext

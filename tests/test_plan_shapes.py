@@ -60,6 +60,13 @@ class TestFlagshipPlan:
             plan = _plan(spark, sf_dir, name)
             assert "Broadcast" in plan, name
 
+    def test_compare_listings_one_exchange_no_join(self, spark, sf_dir):
+        """The bucket diff is one aggregation over both listings' tagged
+        keys: a single shuffle on the key and no join."""
+        plan = _plan(spark, sf_dir, "q_compare_full_outer")
+        assert plan.count("Exchange") == 1, plan
+        assert "Join" not in plan, plan
+
 
 class TestScanPruning:
     @pytest.mark.parametrize(

@@ -803,3 +803,37 @@ class TestOverwriteMergeProperty:
         got = sorted(map(tuple, overwrite_merge(b, u, "key", ["size", "etag"]).collect()))
         assert got == _merge_model(base, updates)
 
+
+_key_lists = st.lists(
+    st.one_of(st.none(), st.sampled_from(["k1", "k2", "k3", "k4"])), max_size=20
+)
+
+
+def _compare_model(a, b):
+    """Python sets: a null key is a key, as in SQL ``EXCEPT``."""
+    left, right = set(a), set(b)
+    return sorted(
+        [(k, "only_left") for k in left - right]
+        + [(k, "only_right") for k in right - left],
+        key=lambda r: (r[0] is not None, r[0] or "", r[1]),
+    )
+
+
+class TestCompareListingsProperty:
+    @settings(max_examples=15, deadline=None)
+    @given(_key_lists, _key_lists)
+    @example(["k1", "k2"], ["k2", "k3", None])
+    @example([None, "k1", "k1"], [None, "k2", "k2"])
+    def test_matches_set_model(self, spark, a, b):
+        """Null keys and duplicates on both sides, spread over several
+        partitions: each key present in exactly one listing appears once,
+        tagged with its side."""
+        from etl_embargo_spark.operators.setops import compare_listings
+
+        left = spark.createDataFrame([(k,) for k in a], "key string").repartition(3)
+        right = spark.createDataFrame([(k,) for k in b], "key string").repartition(2)
+        got = sorted(
+            map(tuple, compare_listings(left, right, "key").collect()),
+            key=lambda r: (r[0] is not None, r[0] or "", r[1]),
+        )
+        assert got == _compare_model(a, b)

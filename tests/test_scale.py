@@ -4,6 +4,7 @@ make the engine viable at 100 TB, checked at toy SF."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_embargo_spark.catalog import load_table
@@ -129,9 +130,54 @@ class TestGetSparkDefaults:
         assert conf["master"] == "local[3]"
         assert conf["spark.sql.shuffle.partitions"] == "3"
         assert conf["spark.default.parallelism"] == "3"
+        # the generated-class cache holds a job's working set (1024, not
+        # Spark's default 100); static, so only the builder can set it
+        assert conf["spark.sql.codegen.cache.maxEntries"] == "1024"
 
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
         assert session.get_spark()["master"] == "local[5]"
+
+
+class TestCodegenCache:
+    """A rerun of each benchmarked job in one session compiles no class.
+
+    ``get_spark`` sizes Spark's generated-class cache to hold a job's
+    working set (``session.CODEGEN_CACHE_MAX_ENTRIES``).  At Spark's
+    default of 100 entries every rerun of the corpus job compiled 55-75
+    classes again through Janino, and the JIT compiled them again after.
+    The compile count is ``CodegenMetrics``' JVM-wide compilation-time
+    histogram, read before and after the second run."""
+
+    _SIZES = {"publish_sync": {"n_public": 400, "n_private": 200},
+              "corpus_dedup": {"n_docs": 300}}
+
+    @pytest.mark.parametrize("name", ["embargo_day", "publish_sync", "corpus_dedup"])
+    def test_rerun_compiles_no_class(self, spark, embargo_inputs, tmp_path, name):
+        from perfbench.workloads import JOBS
+
+        assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+        job = JOBS[name](self._SIZES.get(name, {}))
+        if name == "embargo_day":
+            inputs = embargo_inputs
+        else:
+            inputs = job.generate(str(tmp_path / "inputs"), 3)
+        jsc = spark.sparkContext._jsc
+        compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+            .CodegenMetrics.METRIC_COMPILATION_TIME()
+        for run in (1, 2):
+            out = str(tmp_path / f"out{run}")
+            kept = set(jsc.getPersistentRDDs().keySet())
+            before = compiles.getCount()
+            job.job(spark, inputs, out)
+            compiled = compiles.getCount() - before
+            job.check(inputs, out)
+            # release what the run cached, as the benchmark does between
+            # jobs: a cached relation would change the next run's plan
+            for rdd_id, rdd in jsc.getPersistentRDDs().items():
+                if rdd_id not in kept:
+                    rdd.unpersist(False)
+            spark.catalog.clearCache()
+        assert compiled == 0
 
 
 class TestBucketedJoin:
