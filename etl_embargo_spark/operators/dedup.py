@@ -1179,6 +1179,31 @@ def _drop_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def _checkpoint_round(df: DataFrame) -> DataFrame:
+    """``localCheckpoint`` without the origin plan's size estimate.
+
+    A checkpoint keeps its plan's estimated ``sizeInBytes``, and a join
+    estimates the product of its sides.  Each label round joins the last
+    round's labels with themselves, so the estimate's bit length doubled
+    every round: 4.1M bits after 15 rounds of a 38-node chain with a
+    smaller id hung off its middle (one label change per round), and a
+    few rounds later Catalyst spent minutes multiplying BigInts while
+    planning.  Without it, the relation is estimated at Spark's default
+    size, which is above any broadcast threshold as the product was, so
+    plans do not change.  Partitioning, ordering and constraints stay."""
+    cp = df.localCheckpoint()
+    rel = cp._jdf.queryExecution().logical()
+    session, _stats, constraints = (rel.otherCopyArgs().apply(i) for i in range(3))
+    jvm = cp.sparkSession._jvm
+    bare = rel.copy(
+        rel.output(), rel.rdd(), rel.outputPartitioning(), rel.outputOrdering(),
+        rel.isStreaming(), rel.stream(), session, jvm.scala.Option.empty(), constraints,
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, bare), cp.sparkSession
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 50,
@@ -1207,12 +1232,15 @@ def dedup_clusters(
     vertex adopts the smallest label among itself and its neighbors;
     converged when a round changes nothing.  ``pointer_doubling=True``
     adds a label(label(v)) hop each round (one extra node-sized
-    self-join), cutting rounds from O(diameter) to O(log diameter) — the
-    classic pointer-jumping trick.  Each round is one shuffle join +
-    groupBy-min (AQE picks a broadcast at runtime when the labels are
-    small), and the label relation is ``localCheckpoint``ed per round —
+    self-join), cutting rounds from O(diameter) to O(log diameter) on a
+    chain — the classic pointer-jumping trick.  It does not always: a
+    smaller id hung off a chain's middle still spreads one hop per round.
+    Each round is one shuffle join + groupBy-min (AQE picks a broadcast
+    at runtime when the labels are small), and the label relation is ``localCheckpoint``ed per round —
     WITHOUT that, the lineage doubles every iteration and Catalyst
-    re-plans (and re-executes) an exponentially growing tree.  The
+    re-plans (and re-executes) an exponentially growing tree; the
+    checkpoint drops its plan's size estimate too, which doubles in bit
+    length every round (``_checkpoint_round``).  The
     convergence check is a count() per round — driver CONTROL FLOW, not a
     data pull.  Exhausting ``max_iters`` raises RuntimeError."""
     import pyarrow as pa
@@ -1276,9 +1304,9 @@ def dedup_clusters(
         # checkpoint the joined round ONCE; both the convergence count and
         # the next round's labels read the materialized result (counting
         # first and checkpointing after would execute the join twice)
-        updated = joined.select(
-            "id", new_label.alias("new_label"), "label"
-        ).localCheckpoint()
+        updated = _checkpoint_round(
+            joined.select("id", new_label.alias("new_label"), "label")
+        )
         checkpoints.append(updated)
         changed = updated.filter(F.col("new_label") < F.col("label")).count()
         labels = updated.select("id", F.col("new_label").alias("label"))

@@ -883,6 +883,33 @@ class TestDedupClusters:
                     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                     assert jobs <= self._CHAIN_MAX_JOBS[doubling], (doubling, jobs)
 
+    def test_round_size_estimate_stays_bounded(self, spark, monkeypatch):
+        """The distributed path's labels carry no size estimate compounded
+        over rounds.  A smaller id hung off a chain's middle spreads one
+        hop per round even with pointer doubling; when each round's
+        checkpoint kept its plan's estimate (a product over a self-join),
+        the estimate's bit length doubled every round: 32k bits here, and
+        about 20 rounds on a 40-node chain left Catalyst multiplying
+        BigInts for minutes while planning."""
+        import sys
+
+        from etl_embargo_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_UF_MAX_EDGES", 0)
+        edges = [(i, i + 1) for i in range(12)] + [(6, -1)]
+        pairs = spark.createDataFrame(edges, "a long, b long")
+        out = dedup.dedup_clusters(pairs, pointer_doubling=True)
+        limit = sys.get_int_max_str_digits()
+        sys.set_int_max_str_digits(0)  # py4j reads the estimate as an int
+        try:
+            size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        finally:
+            sys.set_int_max_str_digits(limit)
+        assert int(size).bit_length() <= 64
+        assert {(r["doc_id"], r["cluster"]) for r in out.collect()} == {
+            (i, -1) for i in range(-1, 13)
+        }
+
     def test_non_convergence_raises(self, spark, monkeypatch):
         """Exhausting max_iters with labels still moving must fail loudly,
         never return a silently-split component.  Only the distributed
