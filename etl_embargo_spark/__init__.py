@@ -22,7 +22,7 @@ Layout:
   plans/      — end-to-end pipeline compositions (E1-E3)
   streaming/  — Structured Streaming wrappers for the cron cadence
   registry    — the (queries, oracle_sql) registry consumed by
-                __spark_entry__.py and bench.py
+                __spark_entry__.py and tests/test_oracle_parity.py
 """
 
 __version__ = "0.1.0"

@@ -234,11 +234,12 @@ def table_rows(sf_dir: str, name: str, default: int = 10_000) -> int:
 # co-purchase pair-support matrix feeds six queries) are built once per
 # (session, sf_dir) and persisted, so a sweep session pays the build a
 # single time.  Keyed by applicationId — entries die with their session;
-# stale-session keys are evicted on insert so long multi-recycle sweeps
-# (soak) never accumulate dead references.  Revalidated by storage
-# level: a clearCache() (bench's per-run hygiene, test fixtures) drops
-# the cached blocks, and the next consumer rebuilds+re-persists instead
-# of silently recomputing the full lineage per consumer.
+# stale-session keys are evicted on insert so a process that recycles its
+# session never accumulates dead references.  Revalidated by storage
+# level: a clearCache() (perfbench's release_blocks between jobs, test
+# fixtures) drops the cached blocks, and the next consumer
+# rebuilds+re-persists instead of silently recomputing the full lineage
+# per consumer.
 _SHARED_RELATIONS: dict[tuple[str, str, str], DataFrame] = {}
 
 

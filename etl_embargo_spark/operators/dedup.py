@@ -278,8 +278,9 @@ def exact_collapse_pairs(
     column names to literal columns for identical-text pairs.  The
     groups relation persists across its three consumers (intra, both
     expansion sides) — the returned DataFrame is lazy, so the cache must
-    outlive this builder; LRU eviction / the sweep's clearCache()
-    reclaims it.
+    outlive this builder.  Nothing here unpersists it: LRU eviction or
+    the caller's ``clearCache()`` reclaims it (perfbench's
+    ``run.release_blocks`` does, between jobs).
     """
     from pyspark.storagelevel import StorageLevel
 

@@ -111,7 +111,8 @@ def pagerank(
     # join re-canonicalizes it (pair_support's whole _bucket_pairs
     # pipeline rides inside the cache plan) — pure driver planning tax
     # × n_iters.  ExistingRDD makes per-round planning O(loop body);
-    # blocks are released by the sweep-level block release.
+    # blocks stay until the caller unpersists them (perfbench's
+    # release_blocks) or stops the session.
     ew = ew.localCheckpoint()
     ranks = nodes_n.select(
         "id", (F.lit(1.0) / F.col("_n")).alias("rank")
@@ -136,8 +137,8 @@ def pagerank(
             nxt = nxt.repartition(rank_partitions, "id")
         ranks = nxt.localCheckpoint()
     # the final ranks are checkpointed, so nothing downstream re-reads
-    # the edge blocks; like every per-round checkpoint they are released
-    # by the sweep-level block release
+    # the edge blocks; like every per-round checkpoint they stay until the
+    # caller unpersists them or stops the session
     return ranks
 
 

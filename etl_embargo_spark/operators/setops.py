@@ -21,9 +21,11 @@ def sync_missing(src: DataFrame, dst: DataFrame, key: str) -> DataFrame:
 
     Reference: build dest-name set /root/reference/gcs_operations.go:207-228,
     probe+skip 244-248, copy 249-257.  Anti-join: the copy set is exactly
-    ``src ▷ dst``.
+    ``src ▷ dst``.  A null key counts as a key, as in ``compare_listings``:
+    the join is null-safe (``<=>``), which Spark still plans as one
+    equi-join on the key.
     """
-    return src.join(dst, on=key, how="left_anti")
+    return src.join(dst, src[key].eqNullSafe(dst[key]), how="left_anti")
 
 
 def compare_listings(a: DataFrame, b: DataFrame, key: str) -> DataFrame:

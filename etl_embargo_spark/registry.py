@@ -273,7 +273,8 @@ register(
     SELECT o_orderkey, o_totalprice
     FROM orders o
     WHERE NOT EXISTS (
-        SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
+        SELECT 1 FROM lineitem l
+        WHERE l.l_orderkey IS NOT DISTINCT FROM o.o_orderkey
     )
     """,
 )

@@ -128,40 +128,6 @@ def recommended_conf(
     }
 
 
-def load_context() -> dict:
-    """Box-load snapshot for bench artifacts (VERDICT r9 #5): two
-    consecutive rounds needed prose adjudication because the driver's
-    bench ran on a contended box.  Recording loadavg + running-process
-    count into the JSON makes contention machine-detectable — a
-    loadavg_1m far above the bench's own worker count at capture time
-    means the numbers are inflated by neighbors, not regressions."""
-    try:
-        la1, la5, la15 = os.getloadavg()
-    except OSError:  # pragma: no cover - non-unix
-        la1 = la5 = la15 = -1.0
-    running = 0
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/stat") as f:
-                    # field 3 (after the parenthesized comm) is state
-                    if f.read().rsplit(")", 1)[-1].split()[0] == "R":
-                        running += 1
-            except OSError:
-                continue
-    except OSError:  # pragma: no cover - no /proc
-        running = -1
-    return {
-        "loadavg_1m": round(la1, 2),
-        "loadavg_5m": round(la5, 2),
-        "loadavg_15m": round(la15, 2),
-        "running_procs": running,
-        "cpus": os.cpu_count(),
-    }
-
-
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally provided session.
 

@@ -88,8 +88,8 @@ def test_entry_smoke(spark):
     }
 
 
-# tools/soak.py exports its --sf1-dir so a custom-dir soak run benches and
-# pin-checks the SAME data (ADVICE r5)
+# The sf1 data of test_pinned_oracle_matches_at_sf1; ETL_SF1_DIR is that
+# test's own setting (regenerable: tools/gen_testdata.py --sf 1 --out DIR).
 _SF1_DIR = os.environ.get("ETL_SF1_DIR", "/tmp/td_sf1/sf1")
 
 
@@ -123,7 +123,7 @@ def test_pinned_oracle_matches_at_sf1(spark, name):
     drift) that sf0.01 can't see.
 
     `soak`-marked: q_als alone takes ~337 s here, which doubled the
-    default gate (VERDICT r4 #2) — `tools/soak.py` runs these."""
+    default gate (VERDICT r4 #2).  Run it with `pytest -m soak tests/`."""
     if name == "__absent__":
         pytest.skip(f"no sf1 soak data at {_SF1_DIR} or no sf1 pins")
     from etl_embargo_spark.parity import duckdb_connection

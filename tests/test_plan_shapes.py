@@ -2,8 +2,8 @@
 queries viable at 100 TB, asserted against the optimized physical plan so a
 refactor can't silently trade them away.
 
-(The numbers in bench.py say how fast it is on this box; these tests pin
-WHY it stays fast at 1000x the data.)
+(perfbench's numbers say how fast the jobs are on a given box; these tests
+pin WHY they stay fast at 1000x the data.)
 """
 
 from __future__ import annotations

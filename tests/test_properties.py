@@ -837,3 +837,27 @@ class TestCompareListingsProperty:
             key=lambda r: (r[0] is not None, r[0] or "", r[1]),
         )
         assert got == _compare_model(a, b)
+
+
+class TestSyncMissingProperty:
+    @settings(max_examples=15, deadline=None)
+    @given(_key_lists, _key_lists)
+    @example([None, "k1", "k2"], [None, "k1"])
+    def test_copies_only_left_keys(self, spark, a, b):
+        """Null keys and duplicates on both sides, spread over several
+        partitions: the keys ``sync_missing`` copies are ``compare_listings``'
+        ``only_left`` keys and the set model's ``a - b``, null included, and
+        every source row of such a key is copied."""
+        from etl_embargo_spark.operators.setops import compare_listings, sync_missing
+
+        src_rows = [(k, i) for i, k in enumerate(a)]
+        src = spark.createDataFrame(src_rows, "key string, size int").repartition(3)
+        dst = spark.createDataFrame([(k,) for k in b], "key string").repartition(2)
+        synced = sync_missing(src, dst, "key").collect()
+        diff = compare_listings(src.select("key"), dst, "key")
+        only_left = {r.key for r in diff.filter(F.col("side") == "only_left").collect()}
+        missing = set(a) - set(b)
+        assert {r.key for r in synced} == only_left == missing
+        assert sorted(map(tuple, synced), key=lambda r: r[1]) == [
+            r for r in src_rows if r[0] in missing
+        ]
